@@ -103,6 +103,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     unaffected. The memo lives ON the session object (a new session
     never sees another session's plans) and the mtime/size key means a
     regenerated fixture can never serve a stale relation.
+
+    The frame is SHARED: every call in a session returns the same
+    DataFrame object, with the same column lineage. A self-join must
+    therefore ``.alias()`` each side (``t.alias("l").join(
+    load_table(...).alias("r"), F.col("l.k") == F.col("r.k"))``);
+    an unaliased ``t.join(t, t.k == t.k)`` cannot tell the sides
+    apart.
     """
     import os
 

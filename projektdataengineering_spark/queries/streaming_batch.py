@@ -208,30 +208,22 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture spans well under a year, so the horizon never fires here
     and the oracle equality is exact.
 
-    Keyed-state granularity is a 64-way HASH BUCKET of
-    users, not one user (round 12 — the attribution_stream
-    round-trip economics: per-KEY Arrow groups made this the suite's
-    heaviest sf1 row at 9.9 s, pure per-group overhead): see
-    streaming/stateful.py's bucketed-dedup comment for the eager
-    horizon-sweep contract. The per-key operator remains the
-    semantics reference, pinned by tests/test_streaming.py's
-    eviction/state-row assertions; the bucketed twin's cross-batch
-    carry + sweep is pinned there too."""
+    Keyed state runs through streaming/stateful.py's bucketed_fold
+    (one state group per hash bucket of users — per-KEY Arrow groups
+    made this the suite's heaviest sf1 row at 9.9 s, pure per-group
+    overhead), with its eager horizon sweep; the cross-batch carry and
+    sweep contracts are pinned by tests/test_streaming.py."""
     from ..streaming import (
         open_event_stream,
         run_to_memory_sink,
         stream_no_data_batches,
         stream_state_partitions,
     )
-    from ..streaming.stateful import DEDUP_BUCKETS, dedup_stream_first_wins_bucketed
+    from ..streaming.stateful import dedup_fold_stream
 
     keyed = (
         open_event_stream(spark, sf_dir)
-        .select(
-            (F.col("user_id") % DEDUP_BUCKETS).cast("int").alias("bucket"),
-            F.col("user_id").cast("string").alias("key"),
-            "ts",
-        )
+        .select(F.col("user_id").cast("string").alias("key"), "ts")
         .withWatermark("ts", "1 minute")
     )
     # no-data batch scoped off (r19): the 365-day horizon fires zero
@@ -239,7 +231,7 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch re-commits unchanged state and emits nothing
     with stream_state_partitions(spark), stream_no_data_batches(spark):
         run_to_memory_sink(
-            dedup_stream_first_wins_bucketed(keyed, horizon="365 days"),
+            dedup_fold_stream(keyed, horizon="365 days"),
             "stream_dedup_stateful_sink",
             output_mode="update",
         )
@@ -355,7 +347,7 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver proves, not just runs). The sink's last update per key is
     extracted with max_by(n_events).
 
-    Ordering bound documented at streaming/stateful.py:make_ewma_fold:
+    Ordering bound documented at streaming/stateful.py:ewma_fold_stream:
     within-batch order is pinned by sort; cross-batch order is arrival
     order — correct for time-ordered landing zones, and exact here."""
     from ..streaming import (
@@ -363,21 +355,17 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory_sink,
         stream_state_partitions,
     )
-    from ..streaming.stateful import EWMA_BUCKETS, ewma_stream_bucketed
+    from ..streaming.stateful import ewma_fold_stream
 
-    # 64-way bucketed keyed state (r19): the per-key form paid one
-    # Arrow round-trip per user per batch (1500 groups — profiled as
-    # the whole cost: allUpdatesTimeMs 8.5 s of a 5.0 s drain wall,
-    # summed across 4 stores); the bucketed fold runs the identical
-    # scalar IEEE recurrence per user inside 64 groups. ewma_stream
-    # stays as the per-key semantics reference (tests pin both).
+    # bucketed keyed state (r19): per-user groups paid one Arrow
+    # round-trip per user per batch (1500 groups — profiled as the
+    # whole cost: allUpdatesTimeMs 8.5 s of a 5.0 s drain wall)
     keyed = open_event_stream(spark, sf_dir).select(
-        (F.col("user_id") % EWMA_BUCKETS).cast("int").alias("bucket"),
         "user_id", "ts", "event_id", "value"
     )
     with stream_state_partitions(spark):
         run_to_memory_sink(
-            ewma_stream_bucketed(keyed, alpha=0.25),
+            ewma_fold_stream(keyed, alpha=0.25),
             "stream_ewma_stateful_sink",
             output_mode="update",
         )
@@ -510,7 +498,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog apply as a REAL streaming query with a custom
-    per-key state machine (streaming/stateful.py:cdc_apply_stream):
+    per-key state machine (streaming/stateful.py:cdc_fold_stream):
     'error' tombstones close a generation, upserts extend it, and the
     keyed state carries O(1) scalars per key — the continuous form of
     the batch pipeline_cdc_apply (same tombstone convention, same
@@ -537,22 +525,18 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_no_data_batches,
         stream_state_partitions,
     )
-    from ..streaming.stateful import CDC_BUCKETS, cdc_apply_stream_bucketed
+    from ..streaming.stateful import cdc_fold_stream
 
-    # Keyed-state granularity is a 64-way hash bucket of keys, not one
-    # key (r19 — the stream_dedup_stateful posture): the sf0.1 profile
-    # put the per-key form's cost in 1500 per-group Arrow round-trips
-    # (state allUpdatesTimeMs 12.6 s of a 10.1 s drain). The per-key
-    # operator (cdc_apply_stream) remains the semantics reference,
-    # pinned by tests/test_streaming.py; the bucketed twin's
-    # state-machine equality is pinned there too. The final no-data
-    # batch is scoped off: the 365-day horizon can fire zero timeouts
-    # inside the fixture span, so that batch re-commits unchanged state
-    # and emits nothing (profiled: rows=0, ~1.9 s of plan+store-commit).
+    # Keyed state runs through bucketed_fold (r19: the per-key form's
+    # 1500 per-group Arrow round-trips were its whole sf0.1 cost —
+    # state allUpdatesTimeMs 12.6 s of a 10.1 s drain). The final
+    # no-data batch is scoped off: the 365-day horizon can fire zero
+    # timeouts inside the fixture span, so that batch re-commits
+    # unchanged state and emits nothing (profiled: rows=0, ~1.9 s of
+    # plan+store-commit).
     keyed = (
         open_event_stream(spark, sf_dir)
         .select(
-            (F.col("user_id") % CDC_BUCKETS).cast("int").alias("bucket"),
             F.col("user_id").cast("string").alias("key"),
             "ts",
             "event_id",
@@ -562,7 +546,7 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with stream_state_partitions(spark), stream_no_data_batches(spark):
         run_to_memory_sink(
-            cdc_apply_stream_bucketed(keyed, horizon="365 days"),
+            cdc_fold_stream(keyed, horizon="365 days"),
             "stream_cdc_stateful_sink",
             output_mode="update",
         )

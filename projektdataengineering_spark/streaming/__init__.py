@@ -120,26 +120,25 @@ def open_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (path, mtime_ns, size) → StructType. METADATA memo, not a result
-# cache: the zero-cost-in-principle footer read above measured
-# ~120-180 ms of driver-side work per call (r19), and every streaming
-# query in the suite pays it once per invocation — ~16 queries × 2
-# bench passes ≈ 4-6 s of pure repeated footer parsing. Keyed on the
-# file's identity so a regenerated fixture can never serve a stale
-# schema; the schema is a pure function of the file bytes under the
-# nanosAsLong conf set (identically) by every caller.
-_EVENT_SCHEMA_MEMO: dict = {}
-
-
 def _event_schema_for(spark: SparkSession, path: str):
+    """The events file's stream schema, memoized ON the session (the
+    catalog.load_table scan-memo scope: a new session never sees
+    another session's entries). METADATA memo, not a result cache: the
+    footer read measured ~120-180 ms of driver-side work per call
+    (r19), paid once per streaming query invocation. Keyed on the
+    file's identity (realpath, mtime_ns, size) so a regenerated fixture
+    can never serve a stale schema; the schema is a pure function of
+    the file bytes under the nanosAsLong conf every caller sets."""
     import os
 
     st = os.stat(path)
     key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
-    schema = _EVENT_SCHEMA_MEMO.get(key)
+    memo = getattr(spark, "_pde_event_schema_memo", None)
+    if memo is None:
+        memo = spark._pde_event_schema_memo = {}
+    schema = memo.get(key)
     if schema is None:
-        schema = spark.read.parquet(path).schema
-        _EVENT_SCHEMA_MEMO[key] = schema
+        schema = memo[key] = spark.read.parquet(path).schema
     return schema
 
 

@@ -1,379 +1,386 @@
-"""Custom stateful streaming operator via applyInPandasWithState —
-the engine's pattern for semantics Structured Streaming's built-in
-windows can't express.
+"""Keyed streaming state via applyInPandasWithState — the engine's
+pattern for semantics Structured Streaming's built-in windows can't
+express.
 
-The operator here is *stateful cross-batch dedup with first-wins
-semantics*: emit each key's FIRST-seen row, remember seen keys, drop
-every later duplicate (optionally with a state TTL so the key set
-doesn't grow unboundedly). This is the streaming form of the batch
-``dedup_incremental`` anti-join (operators/incremental.py O4 fix):
-instead of re-joining each batch against an ever-growing warehouse,
-the "existing keys" side lives in Spark's keyed state store.
+Every keyed fold here runs through ONE primitive, :func:`bucketed_fold`.
+Its state granularity is a hash BUCKET of keys, not one key:
+applyInPandasWithState pays one Python/Arrow round-trip per GROUP per
+micro-batch, and per-key groups made that overhead — not the fold
+arithmetic — the whole cost (sf1: per-user attribution 18.7 s vs ~5 s
+bucketed; sf0.1 CDC: 1500 key groups, state allUpdatesTimeMs 12.6 s of
+a 10.1 s drain). A bucket's state holds its keys' fields as parallel
+arrays; keys stay fully independent inside it. Each family supplies
+only ``fold(batch, st)``:
 
-Scale notes: state is partitioned by key across executors exactly like
-a shuffle — no single-node key set. State size is bounded by the TTL
-(processing-time here, to keep the operator deterministic under replay
-give keys an event-time watermark instead). Arrow batches flow per key
-group; the per-group pandas work is O(rows in batch).
+* dedup (:func:`dedup_fold_stream`) — first-wins, the streaming form
+  of the batch ``dedup_incremental`` anti-join (operators/incremental.py
+  O4): the "existing keys" side lives in keyed state instead of being
+  re-joined against an ever-growing warehouse;
+* CDC apply (:func:`cdc_fold_stream`) — a tombstone state machine;
+* EWMA (:func:`ewma_fold_stream`) — a per-key recurrence;
+* attribution (:func:`attribution_stream`) — first/last touch credit.
+
+The Misra-Gries fold (:func:`heavy_hitters_stream`) stays separate: its
+state is a per-bucket sketch, not per-key entries.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# Output/state schemas for the dedup operator over (key, ts, payload).
-# max_ts = the largest event time EVER seen for the key: the eviction
-# deadline anchors to it, not to the current batch's max, so an
-# out-of-order (within-watermark) batch of older rows can never move
-# the timeout backward and evict a key before last-occurrence+horizon.
-DEDUP_OUTPUT_SCHEMA = "key string, first_ts timestamp, n_dropped long"
-DEDUP_STATE_SCHEMA = (
-    "seen boolean, first_ts timestamp, n_dropped long, max_ts timestamp"
-)
+# The one keyed-state bucket count. Fixed: at fixture scale 64 groups
+# amortize the per-group round-trip without starving 4-core executors.
+STATE_BUCKETS = 64
 
 
-def _make_dedup_first_wins(horizon: "pd.Timedelta | None"):
-    """Factory for the first-wins fold. With a ``horizon`` the key's
-    state carries an event-time timeout of (last-seen ts + horizon):
-    once the stream's watermark passes it, Spark calls the fold with
-    ``hasTimedOut`` and the state is REMOVED — the eviction that keeps
-    the seen-key set bounded by the keys active inside one horizon
-    instead of growing forever (the 100-TB contract: state size ∝
-    active keys × horizon, not corpus lifetime).
+def state_bucket(key: Column) -> Column:
+    """The state bucket of ``key`` — the expression bucketed_fold
+    groups by, exposed so callers (and tests) can reason about which
+    keys share a bucket."""
+    return F.pmod(F.xxhash64(key), F.lit(STATE_BUCKETS)).cast("int")
 
-    Dedup-horizon semantics (document to consumers): a duplicate is
-    suppressed only while its key stays warm — i.e. arrives within
-    ``horizon`` of the key's LAST occurrence (idle-anchored, so an
-    active key never expires mid-activity). A re-arrival after the
-    horizon is re-emitted as a fresh first — the standard bounded-
-    horizon dedup contract (exact-once only within the horizon)."""
 
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            # watermark passed last_seen + horizon with no new rows:
-            # evict — the key's next occurrence starts a fresh "first"
-            state.remove()
-            return iter(())
-        n_new = 0
-        first_ts = None
-        last_ts = None
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            batch_min = pdf["ts"].min()
-            batch_max = pdf["ts"].max()
-            first_ts = batch_min if first_ts is None else min(first_ts, batch_min)
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-            n_new += len(pdf)
-        if n_new == 0:
-            return iter(())
+def _fold_state_fn(key_col, fold, fields, order_by, horizon_us, append):
+    """The applyInPandasWithState function behind bucketed_fold (split
+    out so it can be driven with a stand-in GroupState).
 
+    Per invocation: decode the bucket's parallel arrays into
+    ``st = {key: [field, ...]}``; under a horizon, sweep every key whose
+    max-ever event time + horizon is behind the watermark; concatenate
+    the bucket's rows, convert ``ts`` to µs once, sort by ``order_by``
+    and hand them to ``fold``; then re-encode (or
+    remove the emptied state) and arm the bucket's timeout at its
+    earliest key deadline."""
+
+    n_fields = len(fields)
+
+    def fn(_bucket, pdf_iter, state: GroupState):
         if state.exists:
-            seen, prev_first, dropped, prev_max = state.get
-            # idle-anchor on the max event time ever seen: late
-            # (within-watermark) batches of older rows must not shrink
-            # the eviction horizon
-            max_ts = max(pd.Timestamp(prev_max), last_ts)
-            state.update((True, prev_first, dropped + n_new, max_ts))
-            out = pd.DataFrame(
-                {"key": [key[0]], "first_ts": [prev_first], "n_dropped": [dropped + n_new]}
-            )
+            ks, *cols = state.get
+            st = {k: list(v) for k, v in zip(ks, zip(*cols[:n_fields]))}
+            max_us = dict(zip(ks, cols[n_fields])) if horizon_us is not None else {}
         else:
-            max_ts = last_ts
-            state.update((True, first_ts, n_new - 1, max_ts))
-            out = pd.DataFrame(
-                {"key": [key[0]], "first_ts": [first_ts], "n_dropped": [n_new - 1]}
-            )
-        if horizon is not None:
-            state.setTimeoutTimestamp(int((max_ts + horizon).value // 1_000_000))
-        return iter((out,))
-
-    return _fold
-
-
-def dedup_stream_first_wins(keyed: DataFrame, horizon: str | None = None) -> DataFrame:
-    """Apply the stateful first-wins dedup to a streaming DataFrame with
-    columns (key string, ts timestamp, ...). Output mode: update.
-
-    ``horizon`` (e.g. "30 days", pandas-Timedelta syntax) bounds state:
-    keys idle past it are evicted at the watermark (the input stream
-    MUST carry ``withWatermark`` on ts) and a later re-arrival is
-    re-emitted as a fresh first — see _make_dedup_first_wins for the
-    exact dedup-horizon contract. Without it state never expires
-    (bounded-replay / test use only — never run an unbounded production
-    stream without a horizon)."""
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_dedup_first_wins(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-# Bucketed first-wins dedup: identical to dedup_stream_first_wins
-# WHILE NO HORIZON EXPIRY FIRES (always, when horizon=None; see the
-# eager-vs-lazy divergence below for replays where a deadline passes —
-# a key re-arriving in the same batch its deadline expired is a fresh
-# first here vs a counted duplicate in the per-key twin), keyed-state
-# granularity a HASH BUCKET of keys instead of one key (the
-# attribution_stream posture): applyInPandasWithState pays one
-# python/Arrow round-trip per GROUP per batch, and at sf1 the per-KEY
-# form's ~10⁴ round-trips were the whole cost (9.9 s, the suite's
-# heaviest sf1 row — the exact pathology attribution fixed 18.7→3.2 s
-# with 64 buckets). A bucket's state holds its keys' (first_ts,
-# n_dropped, max_ts) as parallel arrays (epoch micros — state-schema
-# arrays stay primitive); keys remain fully independent.
-#
-# Horizon semantics are the EAGER form of the per-key operator's: the
-# fold sweeps expired keys (max_ts + horizon < watermark) at the START
-# of every bucket invocation — before folding the new rows, so a
-# re-arrival after expiry is ALWAYS a fresh first (the per-key twin
-# relies on Spark's lazy timeout, which only fires in a batch where the
-# key has no data; eager sweep is deterministic under replay, which is
-# the stricter contract). Idle buckets are swept by a bucket-level
-# event-time timeout armed at the bucket's earliest key deadline.
-DEDUP_BUCKETS = 64
-DEDUP_BUCKETED_STATE_SCHEMA = (
-    "keys array<string>, first_us array<long>, drops array<long>, "
-    "max_us array<long>"
-)
-
-
-def _make_dedup_bucketed(horizon: "pd.Timedelta | None"):
-    horizon_us = None if horizon is None else int(horizon.value // 1_000)
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            ks, firsts, drops, maxs = state.get
-            st = {
-                k: [int(f), int(d), int(m)]
-                for k, f, d, m in zip(ks, firsts, drops, maxs)
-            }
-        else:
-            st = {}
-        # watermark read only under a horizon: NoTimeout mode supports
-        # non-watermarked streams, where getCurrentWatermarkMs raises
+            st, max_us = {}, {}
         if horizon_us is not None:
-            wm_us = state.getCurrentWatermarkMs() * 1_000
-            if wm_us > 0:
-                for k in [
-                    k for k, v in st.items() if v[2] + horizon_us < wm_us
-                ]:
-                    del st[k]
+            # EAGER sweep, before the new rows fold: a re-arrival after
+            # its deadline is always a fresh key, deterministic under
+            # replay (Spark's own per-key timeout fires lazily, only in
+            # a batch where the key has no data). The watermark is read
+            # only under a horizon: NoTimeout streams may have none.
+            wm_ms = state.getCurrentWatermarkMs()
+            if wm_ms > 0:
+                for k in [k for k, m in max_us.items() if m + horizon_us < wm_ms * 1_000]:
+                    del st[k], max_us[k]
 
         out = None
-        if not state.hasTimedOut:
-            frames = [pdf for pdf in pdf_iter if len(pdf)]
-            if frames:
-                batch = pd.concat(frames)
-                us = batch["ts"].astype("int64") // 1_000  # ns → us
-                agg = us.groupby(batch["key"], sort=True).agg(
-                    ["min", "max", "count"]
-                )
-                okeys, ofirst, odrop = [], [], []
-                for k, mn, mx, cnt in zip(
-                    agg.index, agg["min"], agg["max"], agg["count"]
-                ):
+        frames = [pdf for pdf in pdf_iter if len(pdf)]
+        if frames:
+            batch = pd.concat(frames, ignore_index=True)
+            del batch["_bucket"]
+            if "ts" in batch:
+                # event time as int64 epoch µs by CONVERSION, whatever
+                # datetime64 unit Arrow delivers ([ns] today, [us] under
+                # newer pandas defaults) — never by assuming ns. Naive
+                # wall clocks read as UTC: bucketed_fold requires a UTC
+                # session, which also makes them comparable with the
+                # watermark.
+                batch["ts"] = batch["ts"].to_numpy("datetime64[us]").view("int64")
+            if order_by:
+                batch = batch.sort_values(list(order_by), kind="stable", ignore_index=True)
+            out = fold(batch, st)
+            if horizon_us is not None:
+                # idle-anchor on the max event time EVER seen: a late
+                # (within-watermark) batch of older rows can never move
+                # a key's deadline backward
+                for k, m in batch.groupby(key_col, sort=False)["ts"].max().items():
                     if k in st:
-                        ent = st[k]
-                        ent[1] += int(cnt)
-                        ent[2] = max(ent[2], int(mx))
-                    else:
-                        ent = st[k] = [int(mn), int(cnt) - 1, int(mx)]
-                    okeys.append(k)
-                    ofirst.append(ent[0])
-                    odrop.append(ent[1])
-                out = pd.DataFrame(
-                    {
-                        "key": okeys,
-                        "first_ts": pd.to_datetime(ofirst, unit="us"),
-                        "n_dropped": odrop,
-                    }
-                )
+                        max_us[k] = max(max_us.get(k, int(m)), int(m))
+            if not append:
+                # update mode: one row for EVERY key of the micro-batch
+                # that has state after the fold — including keys the
+                # fold left unchanged (e.g. NULL-only rows)
+                rows = [[k, *st[k]] for k in pd.unique(batch[key_col]) if k in st]
+                out = pd.DataFrame(rows, columns=[key_col, *fields]) if rows else None
 
         if not st:
             state.remove()
-            return iter(())
-        ks = sorted(st)
-        state.update((
-            ks,
-            [st[k][0] for k in ks],
-            [st[k][1] for k in ks],
-            [st[k][2] for k in ks],
-        ))
-        if horizon_us is not None:
-            # arm the bucket sweep at the earliest key deadline; Spark
-            # requires a timeout strictly beyond the current watermark
-            deadline_ms = (min(v[2] for v in st.values()) + horizon_us) // 1_000
-            state.setTimeoutTimestamp(max(deadline_ms, state.getCurrentWatermarkMs() + 1))
-        return iter(() if out is None else (out,))
+        else:
+            ks = sorted(st)
+            cols = [[st[k][i] for k in ks] for i in range(n_fields)]
+            if horizon_us is not None:
+                cols.append([max_us[k] for k in ks])
+            # state arrays must hold Python scalars, not numpy ones
+            state.update(tuple(np.asarray(c).tolist() for c in (ks, *cols)))
+            if horizon_us is not None:
+                # Spark requires a timeout strictly beyond the watermark
+                deadline_ms = (min(max_us.values()) + horizon_us) // 1_000
+                state.setTimeoutTimestamp(max(deadline_ms, wm_ms + 1))
+        return iter(() if out is None or out.empty else (out,))
 
-    return _fold
+    return fn
 
 
-def dedup_stream_first_wins_bucketed(
-    keyed: DataFrame, horizon: str | None = None
+def bucketed_fold(
+    keyed: DataFrame,
+    key_col: str,
+    fold,
+    state_fields: str,
+    *,
+    order_by: tuple = (),
+    horizon: str | None = None,
+    append_schema: str | None = None,
 ) -> DataFrame:
-    """Bucketed twin of dedup_stream_first_wins for high-cardinality
-    key spaces: input carries (bucket int, key string, ts timestamp);
-    state granularity is the bucket (see the module comment above for
-    the round-trip economics and the eager-sweep horizon contract).
-    Output schema and update-mode emissions are IDENTICAL to the
-    per-key operator — one (key, first_ts, n_dropped) row per touched
-    key per micro-batch."""
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _make_dedup_bucketed(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_BUCKETED_STATE_SCHEMA,
-        outputMode="update",
+    """Run ``fold`` as bucketed keyed state over the streaming frame
+    ``keyed``.
+
+    ``fold(batch, st)`` gets one bucket's micro-batch rows — several
+    keys, sorted by ``order_by`` (a groupby on ``key_col`` keeps that
+    order per key), ``ts`` as int64 µs when present — and ``st``, a
+    dict from key to the list of its ``state_fields`` values (DDL,
+    e.g. ``"n long, s double"``). It updates ``st`` in place, adding
+    the keys it starts tracking.
+
+    Emission: by default (update mode) the primitive emits one
+    ``(key_col, *state_fields)`` row for every key of the micro-batch
+    that has state after the fold; ``fold`` returns None. With
+    ``append_schema`` (append mode) the fold instead returns the rows
+    to emit — a pandas frame in that schema, or None.
+
+    ``horizon`` (pandas-Timedelta syntax, e.g. ``"30 days"``) bounds
+    state: a key whose max-ever ``ts`` + horizon falls behind the
+    watermark is swept and its next occurrence starts fresh, so state
+    is ∝ keys active within one horizon. The input must then carry
+    ``withWatermark`` on ``ts``. Without it state never expires."""
+    if "ts" in keyed.columns:
+        from ..catalog import _require_utc_session
+
+        _require_utc_session(keyed.sparkSession, "bucketed_fold event time")
+    fields = [f.split() for f in state_fields.split(",")]
+    key_type = keyed.schema[key_col].dataType.simpleString()
+    state_schema = ", ".join(
+        [f"{key_col} array<{key_type}>"]
+        + [f"{n} array<{t}>" for n, t in fields]
+        + (["max_us array<long>"] if horizon else [])
+    )
+    horizon_us = pd.Timedelta(horizon).value // 1_000 if horizon else None
+    fn = _fold_state_fn(
+        key_col, fold, [n for n, _ in fields], tuple(order_by), horizon_us,
+        append_schema is not None,
+    )
+    bucketed = keyed.withColumn("_bucket", state_bucket(F.col(key_col)))
+    return bucketed.groupBy("_bucket").applyInPandasWithState(
+        fn,
+        outputStructType=append_schema or f"{key_col} {key_type}, {state_fields}",
+        stateStructType=state_schema,
+        outputMode="update" if append_schema is None else "append",
         timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
+            GroupStateTimeout.EventTimeTimeout if horizon else GroupStateTimeout.NoTimeout
         ),
     )
 
 
-# Stateful sessionizer: custom session windows with carry-over state.
-SESSION_OUTPUT_SCHEMA = (
-    "key string, session_start timestamp, session_last timestamp, "
-    "n_events long, sum_value double, is_open boolean"
-)
-SESSION_STATE_SCHEMA = (
-    "session_start timestamp, session_last timestamp, n_events long, sum_value double"
-)
-
-_GAP = pd.Timedelta(minutes=30)
+# ---------------------------------------------------------------------------
+# The families built on bucketed_fold
+# ---------------------------------------------------------------------------
 
 
-def _sessionize_stateful(key, pdf_iter, state: GroupState):
-    """Per-key gap sessionization with cross-batch carry-over: the open
-    session lives in keyed state; a batch's rows (sorted by event time)
-    either extend it or close it and start the next. Closed sessions
-    emit with is_open=false; the still-open session re-emits every
-    batch with is_open=true (update mode — the sink's latest row per
-    (key, session_start) is the session's current truth).
-
-    This is the applyInPandasWithState twin of the built-in
-    session_window aggregate (streaming/__init__.py) — the shape to
-    copy when session semantics outgrow the built-in (per-session
-    custom accumulators, dynamic gaps, emit-on-close side effects)."""
-    rows = [pdf[["ts", "value"]] for pdf in pdf_iter if len(pdf)]
-    if not rows:
-        return iter(())
-    batch = pd.concat(rows).sort_values("ts")
-
-    if state.exists:
-        start, last, n, vsum = state.get
-    else:
-        start = last = None
-        n, vsum = 0, 0.0
-
-    out: list[tuple] = []
-    for ts, value in zip(batch["ts"], batch["value"]):
-        v = 0.0 if pd.isna(value) else float(value)
-        if start is None:
-            start, last, n, vsum = ts, ts, 1, v
-        elif ts - last > _GAP:
-            out.append((key[0], start, last, n, vsum, False))
-            start, last, n, vsum = ts, ts, 1, v
+def _first_wins(batch: pd.DataFrame, st: dict) -> None:
+    agg = batch.groupby("key", sort=False)["ts"].agg(["min", "count"])
+    for k, first, n in zip(agg.index, agg["min"].tolist(), agg["count"].tolist()):
+        ent = st.get(k)
+        if ent is None:
+            st[k] = [first, n - 1]
         else:
-            last, n, vsum = ts, n + 1, vsum + v
-    state.update((start, last, n, vsum))
-    out.append((key[0], start, last, n, vsum, True))
-    return iter(
-        (
-            pd.DataFrame(
-                out,
-                columns=[
-                    "key", "session_start", "session_last",
-                    "n_events", "sum_value", "is_open",
-                ],
-            ),
-        )
+            ent[1] += n
+
+
+def dedup_fold_stream(keyed: DataFrame, horizon: str | None = None) -> DataFrame:
+    """Cross-batch first-wins dedup over (key string, ts timestamp, ...):
+    emits each touched key's (first_ts, n_dropped) — the first-seen
+    event time and how many later duplicates were suppressed.
+
+    Dedup-horizon contract: a duplicate is suppressed only while its
+    key stays warm — arrives within ``horizon`` of the key's LAST
+    occurrence (idle-anchored, so an active key never expires
+    mid-activity). A re-arrival after the horizon is a fresh first —
+    exact-once only within the horizon. No horizon: state never
+    expires (bounded replay only)."""
+    return bucketed_fold(
+        keyed, "key", _first_wins, "first_us long, n_dropped long", horizon=horizon
+    ).select("key", F.timestamp_micros("first_us").alias("first_ts"), "n_dropped")
+
+
+def _cdc_apply(batch: pd.DataFrame, st: dict) -> None:
+    ets = batch["event_type"].to_numpy()
+    is_del_all = ets == "error"
+    for k, idx in batch.groupby("key", sort=False).indices.items():
+        is_del = is_del_all[idx]
+        b_dels = int(is_del.sum())
+        # [n_tombstones, alive, last_event_type, gen_events, n_seen]
+        ent = st.setdefault(k, [0, True, "", 0, 0])
+        if b_dels:
+            # live rows after the batch's last tombstone open the new
+            # generation; everything before belongs to closed ones
+            last_del = int(is_del.nonzero()[0][-1])
+            ent[3] = int((~is_del[last_del + 1 :]).sum())
+        else:
+            ent[3] += len(idx)
+        ent[0] += b_dels
+        ent[1] = not bool(is_del[-1])
+        ent[2] = str(ets[idx[-1]])
+        ent[4] += len(idx)
+
+
+def cdc_fold_stream(keyed: DataFrame, horizon: str | None = None) -> DataFrame:
+    """CDC changelog apply over (key string, ts timestamp, event_id
+    long, event_type string) — the streaming form of
+    queries/pipeline_ops.pipeline_cdc_apply: 'error' rows are DELETE
+    tombstones that close the key's current generation; every other
+    row upserts into it. State is O(1) scalars per key.
+
+    Ordering contract: within a micro-batch rows fold in (ts, event_id)
+    order; across batches the fold is a state machine, so batches must
+    arrive in event order — the availableNow replay/backfill situation
+    where CDC apply must be deterministic. A key idle past ``horizon``
+    is swept and a later re-arrival restarts its history. The sink's
+    last update per key (n_seen is monotone) is the final state."""
+    return bucketed_fold(
+        keyed,
+        "key",
+        _cdc_apply,
+        "n_tombstones long, alive boolean, last_event_type string, "
+        "gen_events long, n_seen long",
+        order_by=("ts", "event_id"),
+        horizon=horizon,
     )
 
 
-def sessionize_stream(keyed: DataFrame) -> DataFrame:
-    """Apply the stateful sessionizer to a streaming DataFrame with
-    columns (key string, ts timestamp, value double). Output mode:
-    update. State is one open session per key — bounded; production
-    adds an event-time timeout to flush keys that go quiet forever."""
-    return keyed.groupBy("key").applyInPandasWithState(
-        _sessionize_stateful,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def ewma_fold_stream(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
+    """Cross-batch EWMA over (user_id long, ts timestamp, event_id long,
+    value double): state carries (rows seen, smoothed value) per user;
+    each micro-batch folds its rows in (ts, event_id) order with the
+    batch operator's scalar IEEE recurrence (queries/timeseries.py
+    pipeline_ewma_smooth), so an in-order replay equals the batch fold
+    exactly. NULL values never enter the recurrence (they would poison
+    every later step), but a user with state still gets its row.
 
+    Ordering bound: within a batch the sort pins the order; across
+    batches it is arrival order — correct for append-in-time-order
+    landing zones, and exact under availableNow replay."""
 
-# Stateful streaming EWMA: the cross-batch twin of the batch
-# pipeline_ewma_smooth recurrence (queries/timeseries.py).
-EWMA_OUTPUT_SCHEMA = "user_id long, n_events long, last_ewma double"
-EWMA_STATE_SCHEMA = "s double, n long"
-
-
-def make_ewma_fold(alpha: float):
-    """Factory for the per-key EWMA state function: state carries
-    (current smoothed value, rows seen); each micro-batch sorts its
-    rows by (ts, event_id) and folds them onto the carried state —
-    identical arithmetic to the batch operator, so on an in-order
-    stream the final state equals the batch fold exactly.
-
-    Ordering bound (same class as dedup_stream_first_wins's): WITHIN a
-    micro-batch the fold order is pinned by the sort; ACROSS batches
-    it is arrival order, correct for the append-in-time-order landing
-    zones the file source models (and exactly the batch result under
-    availableNow replay of a bounded fixture, where everything is one
-    batch). An out-of-order production stream would buffer rows per
-    watermark interval before folding."""
-
-    def _fold(key, pdf_iter, state: GroupState):
-        s, n = state.get if state.exists else (None, 0)
-        for pdf in pdf_iter:
-            # NULL values must not fold NaN into the state (it would
-            # poison every later EWMA step); dropping them keeps the
-            # fold aligned with the batch twin and the oracle's
-            # `WHERE value IS NOT NULL` (ADVICE r6).
-            pdf = pdf.dropna(subset=["value"])
-            if len(pdf) == 0:
+    def fold(batch: pd.DataFrame, st: dict) -> None:
+        vals = batch["value"].to_numpy(dtype="float64", na_value=np.nan)
+        for u, idx in batch.groupby("user_id", sort=False).indices.items():
+            xs = vals[idx]
+            xs = xs[~np.isnan(xs)]
+            if not len(xs):
                 continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for x in pdf["value"]:
+            n, s = st.get(u, (0, None))
+            for x in xs:
                 s = x if s is None else alpha * x + (1.0 - alpha) * s
-            n += len(pdf)
-        if s is None:
-            return iter(())
-        state.update((float(s), int(n)))
-        return iter(
-            (pd.DataFrame({"user_id": [key[0]], "n_events": [n], "last_ewma": [s]}),)
-        )
+            st[u] = [n + len(xs), float(s)]
 
-    return _fold
-
-
-def ewma_stream(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
-    """Apply the stateful EWMA to a streaming DataFrame with columns
-    (user_id long, ts timestamp, event_id long, value double)."""
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_ewma_fold(alpha),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucketed_fold(
+        keyed,
+        "user_id",
+        fold,
+        "n_events long, last_ewma double",
+        order_by=("ts", "event_id"),
     )
 
 
+ATTRIB_OUTPUT_SCHEMA = (
+    "user_id long, event_id long, last_ch string, first_ch string, "
+    "cents long"
+)
+
+
+def _attribute(batch: pd.DataFrame, st: dict) -> pd.DataFrame | None:
+    """Rows arrive sorted (ts, event_id); the last touch as of
+    each row is the grouped ffill of the non-purchase channel shifted
+    one row within the user (exactly the batch twin's
+    rowsBetween(unboundedPreceding, -1) frame), the first touch the
+    same over a keep-only-first-valid mask. Rows without a batch-local
+    touch fall back to the user's carried [first, last] state, and
+    absent state credits 'direct'. Cents floor(value·100 + 0.5) matches
+    the oracle; a NULL value emits NULL cents, so the sink's SUM skips
+    it exactly as SQL does."""
+    users = batch["user_id"]
+    et = batch["event_type"]
+    touch = et.where(et != "purchase", other=None)
+    g = touch.groupby(users, sort=False)
+    last_asof = g.ffill().groupby(users, sort=False).shift(1)
+    first_only = touch.where(
+        g.cumcount() - touch.isna().groupby(users, sort=False).cumsum() == 0
+    )
+    first_asof = (
+        first_only.groupby(users, sort=False).ffill().groupby(users, sort=False).shift(1)
+    )
+    # last touch: the batch-local carry wins (more recent); first
+    # touch: pinned forever once set — the CARRIED state wins
+    last_asof = last_asof.fillna(users.map({u: v[1] for u, v in st.items()}).astype(object))
+    first_asof = users.map({u: v[0] for u, v in st.items()}).astype(object).fillna(first_asof)
+
+    out = None
+    is_p = (et == "purchase").to_numpy()
+    if is_p.any():
+        out = pd.DataFrame(
+            {
+                "user_id": users.to_numpy()[is_p],
+                "event_id": batch["event_id"].to_numpy()[is_p],
+                "last_ch": [
+                    c if isinstance(c, str) else "direct"
+                    for c in last_asof.to_numpy()[is_p]
+                ],
+                "first_ch": [
+                    c if isinstance(c, str) else "direct"
+                    for c in first_asof.to_numpy()[is_p]
+                ],
+                "cents": pd.Series(
+                    [
+                        None if pd.isna(x) else int(math.floor(x * 100 + 0.5))
+                        for x in batch["value"].to_numpy()[is_p]
+                    ],
+                    dtype=object,
+                ),
+            }
+        )
+    # fold the batch's touches into the carried state
+    nn = touch.dropna()
+    if len(nn):
+        by = nn.groupby(users[nn.index], sort=False)
+        firsts, lasts = by.first(), by.last()
+        for u, first, last in zip(firsts.index, firsts, lasts):
+            st.setdefault(u, [first, last])[1] = last
+    return out
+
+
+def attribution_stream(keyed: DataFrame) -> DataFrame:
+    """Streaming first/last-touch conversion attribution over (user_id
+    long, ts timestamp, event_id long, event_type string, value double):
+    the per-user state is the (first, last) non-purchase channel seen so
+    far — O(1) forever — and every purchase emits its credit the moment
+    it arrives (append mode), never re-reading history.
+
+    Ordering bound: the ewma_fold_stream contract — exact under
+    availableNow on the bounded fixture (one in-order batch)."""
+    return bucketed_fold(
+        keyed,
+        "user_id",
+        _attribute,
+        "first_ch string, last_ch string",
+        order_by=("ts", "event_id"),
+        append_schema=ATTRIB_OUTPUT_SCHEMA,
+    )
+
+
+# ---------------------------------------------------------------------------
 # Streaming Misra-Gries heavy hitters: SKETCHES AS KEYED STATE. The
 # term space is hash-partitioned into buckets; each bucket's state is
 # one MG(k) counter summary folded continuously across micro-batches —
@@ -383,6 +390,8 @@ def ewma_stream(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
 # (est ≤ exact; exact − est ≤ n_bucket/(k+1) ≤ n/(k+1); any term with
 # exact > n/(k+1) is present) — theorems independent of batch boundaries
 # and arrival order, which is what the certification query hashes.
+# ---------------------------------------------------------------------------
+
 MG_OUTPUT_SCHEMA = "bucket int, batch_no long, term string, est long"
 MG_STATE_SCHEMA = "batch_no long, terms array<string>, counts array<long>"
 
@@ -396,8 +405,6 @@ def make_mg_fold(k: int):
     rows (update-mode memory sinks accumulate every emission)."""
 
     def _fold(key, pdf_iter, state: GroupState):
-        import numpy as np
-
         if state.exists:
             bno, terms, counts = state.get
             counters = dict(zip(terms, (int(c) for c in counts)))
@@ -439,517 +446,4 @@ def heavy_hitters_stream(keyed: DataFrame, k: int = 400) -> DataFrame:
         stateStructType=MG_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Stateful CDC apply: per-key state machine over a tombstoned changelog
-# ---------------------------------------------------------------------------
-
-CDC_OUTPUT_SCHEMA = (
-    "key string, n_tombstones long, alive boolean, "
-    "last_event_type string, gen_events long, n_seen long"
-)
-CDC_STATE_SCHEMA = (
-    "n_tombstones long, gen_events long, last_event_type string, "
-    "alive boolean, n_seen long, max_ts timestamp"
-)
-
-
-def _make_cdc_apply(horizon: "pd.Timedelta | None"):
-    """Factory for the per-key CDC state machine
-    (the streaming form of queries/pipeline_ops.pipeline_cdc_apply):
-    'error' rows are DELETE tombstones that close the key's current
-    generation; every other row upserts into it. State carries
-    (tombstone count, live events in the open generation, last op,
-    alive, rows seen) — O(1) per key regardless of history length.
-
-    Ordering contract: rows WITHIN a micro-batch are sorted by
-    (ts, event_id) before folding (applyInPandasWithState gives no
-    intra-batch order); ACROSS batches the fold is a state machine,
-    so correctness requires batches to arrive in event order — the
-    replay/backfill situation (availableNow over a bounded landing
-    zone) where CDC apply must be deterministic, and the situation
-    the oracle equality certifies. A live out-of-order stream needs
-    the watermark small enough that reordering stays intra-batch.
-
-    Eviction mirrors the dedup horizon contract: a key idle past
-    ``horizon`` (anchored to the max event time ever seen — the
-    monotone clamp, never moved backward by late batches) is evicted
-    at the watermark; a later re-arrival restarts its history (fresh
-    generation/tombstone counts) — the bounded-horizon CDC contract:
-    state ∝ keys active within one horizon."""
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return iter(())
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            return iter(())
-        batch = pd.concat(parts).sort_values(["ts", "event_id"])
-        is_del = (batch["event_type"] == "error").to_numpy()
-        b_dels = int(is_del.sum())
-        if state.exists:
-            n_tomb, gen_events, last_et, alive, n_seen, prev_max = state.get
-            max_ts = max(pd.Timestamp(prev_max), batch["ts"].max())
-        else:
-            n_tomb, gen_events, n_seen = 0, 0, 0
-            max_ts = batch["ts"].max()
-        if b_dels:
-            # live rows after the batch's last tombstone open the new
-            # generation; everything before belongs to closed ones
-            last_del_pos = int(is_del.nonzero()[0][-1])
-            gen_events = int((~is_del[last_del_pos + 1 :]).sum())
-        else:
-            gen_events = gen_events + len(batch)
-        n_tomb += b_dels
-        n_seen += len(batch)
-        last_et = str(batch["event_type"].iloc[-1])
-        alive = not bool(is_del[-1])
-        state.update((n_tomb, gen_events, last_et, alive, n_seen, max_ts))
-        if horizon is not None:
-            state.setTimeoutTimestamp(int((max_ts + horizon).value // 1_000_000))
-        out = pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_tombstones": [n_tomb],
-                "alive": [alive],
-                "last_event_type": [last_et],
-                "gen_events": [gen_events],
-                "n_seen": [n_seen],
-            }
-        )
-        return iter((out,))
-
-    return _fold
-
-
-def cdc_apply_stream(keyed: DataFrame, horizon: str | None = None) -> DataFrame:
-    """Apply the stateful CDC fold to a streaming DataFrame with columns
-    (key string, ts timestamp, event_id long, event_type string).
-    Output mode: update — the sink's last update per key is the final
-    materialized state (n_seen is monotone, so max_by(·, n_seen)
-    extracts it deterministically)."""
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_cdc_apply(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=CDC_OUTPUT_SCHEMA,
-        stateStructType=CDC_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-# Bucketed CDC apply: identical per-key state machine to
-# cdc_apply_stream (below) — tombstones close generations, upserts
-# extend them, O(1) scalars per key — but the keyed-state granularity
-# is a HASH BUCKET of keys (the dedup/attribution posture, r19):
-# applyInPandasWithState pays one Python/Arrow round-trip per GROUP
-# per micro-batch, and the sf0.1 profile put the per-key form's whole
-# cost there (1500 key groups; state allUpdatesTimeMs 12.6 s of a
-# 10.1 s drain wall vs ~0.2 s of actual fold arithmetic). A bucket's
-# state holds its keys' scalars as parallel arrays; keys remain fully
-# independent (the fold groups by key inside the bucket).
-#
-# Horizon semantics are the EAGER form (the bucketed-dedup contract):
-# expired keys (max_ts + horizon < watermark) are swept at the START of
-# every bucket invocation, so a re-arrival after expiry is ALWAYS a
-# fresh history — deterministic under replay, stricter than the per-key
-# twin's lazy Spark timeout (which fires only in a batch where the key
-# has no data). Idle buckets are swept by a bucket-level event-time
-# timeout armed at the bucket's earliest key deadline.
-CDC_BUCKETS = 64
-CDC_BUCKETED_STATE_SCHEMA = (
-    "keys array<string>, n_tombs array<long>, gens array<long>, "
-    "last_ets array<string>, alives array<boolean>, n_seens array<long>, "
-    "max_us array<long>"
-)
-
-
-def _make_cdc_apply_bucketed(horizon: "pd.Timedelta | None"):
-    horizon_us = None if horizon is None else int(horizon.value // 1_000)
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            ks, tombs, gens, lets, alvs, seens, maxs = state.get
-            st = {
-                k: [int(t), int(g), le, bool(a), int(s), int(m)]
-                for k, t, g, le, a, s, m in zip(
-                    ks, tombs, gens, lets, alvs, seens, maxs
-                )
-            }
-        else:
-            st = {}
-        # eager horizon sweep (watermark read only under a horizon:
-        # NoTimeout mode supports non-watermarked streams)
-        if horizon_us is not None:
-            wm_us = state.getCurrentWatermarkMs() * 1_000
-            if wm_us > 0:
-                for k in [
-                    k for k, v in st.items() if v[5] + horizon_us < wm_us
-                ]:
-                    del st[k]
-
-        out = None
-        if not state.hasTimedOut:
-            frames = [pdf for pdf in pdf_iter if len(pdf)]
-            if frames:
-                batch = pd.concat(frames).sort_values(["ts", "event_id"])
-                us = batch["ts"].astype("int64") // 1_000  # ns → µs
-                okeys, otomb, oalive, olet, ogen, oseen = [], [], [], [], [], []
-                for k, idx in batch.groupby("key", sort=True).indices.items():
-                    et = batch["event_type"].to_numpy()[idx]
-                    is_del = et == "error"
-                    b_dels = int(is_del.sum())
-                    k_max = int(us.to_numpy()[idx].max())
-                    ent = st.get(k)
-                    if ent is None:
-                        ent = st[k] = [0, 0, "", True, 0, k_max]
-                    else:
-                        ent[5] = max(ent[5], k_max)
-                    if b_dels:
-                        # live rows after the batch's last tombstone open
-                        # the new generation (the per-key fold's rule)
-                        last_del_pos = int(is_del.nonzero()[0][-1])
-                        ent[1] = int((~is_del[last_del_pos + 1 :]).sum())
-                    else:
-                        ent[1] += len(idx)
-                    ent[0] += b_dels
-                    ent[4] += len(idx)
-                    ent[2] = str(et[-1])
-                    ent[3] = not bool(is_del[-1])
-                    okeys.append(k)
-                    otomb.append(ent[0])
-                    oalive.append(ent[3])
-                    olet.append(ent[2])
-                    ogen.append(ent[1])
-                    oseen.append(ent[4])
-                out = pd.DataFrame(
-                    {
-                        "key": okeys,
-                        "n_tombstones": otomb,
-                        "alive": oalive,
-                        "last_event_type": olet,
-                        "gen_events": ogen,
-                        "n_seen": oseen,
-                    }
-                )
-
-        if not st:
-            state.remove()
-            return iter(())
-        ks = sorted(st)
-        state.update((
-            ks,
-            [st[k][0] for k in ks],
-            [st[k][1] for k in ks],
-            [st[k][2] for k in ks],
-            [st[k][3] for k in ks],
-            [st[k][4] for k in ks],
-            [st[k][5] for k in ks],
-        ))
-        if horizon_us is not None:
-            deadline_ms = (min(v[5] for v in st.values()) + horizon_us) // 1_000
-            state.setTimeoutTimestamp(
-                max(deadline_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        return iter(() if out is None else (out,))
-
-    return _fold
-
-
-def cdc_apply_stream_bucketed(
-    keyed: DataFrame, horizon: str | None = None
-) -> DataFrame:
-    """Bucketed twin of cdc_apply_stream for high-cardinality key
-    spaces: input carries (bucket int, key string, ts timestamp,
-    event_id long, event_type string); state granularity is the bucket
-    (see the module comment above for the round-trip economics and the
-    eager-sweep horizon contract). Output schema and update-mode
-    emissions are IDENTICAL to the per-key operator — one row per
-    touched key per micro-batch, same state-machine values."""
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _make_cdc_apply_bucketed(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=CDC_OUTPUT_SCHEMA,
-        stateStructType=CDC_BUCKETED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-# Bucketed streaming EWMA: same recurrence as ewma_stream (below),
-# bucket-granular state for the same round-trip economics as the CDC
-# twin (sf0.1 profile: 1500 per-user groups were the whole cost).
-EWMA_BUCKETS = 64
-EWMA_BUCKETED_STATE_SCHEMA = (
-    "user_ids array<long>, s array<double>, n array<long>"
-)
-
-
-def make_ewma_fold_bucketed(alpha: float):
-    """Bucketed twin of make_ewma_fold: per-user (smoothed value, count)
-    pairs live as parallel arrays in the bucket's state; the fold sorts
-    the bucket's rows by (user_id, ts, event_id) and walks each user's
-    slice with the IDENTICAL scalar IEEE recurrence — same arithmetic,
-    same within-batch ordering contract (globally sorted is strictly
-    stronger than the per-key fold's per-chunk sort), so the final
-    state per user is bit-equal to the per-key operator's."""
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            uids, svals, ns = state.get
-            st = {int(u): [v, int(c)] for u, v, c in zip(uids, svals, ns)}
-        else:
-            st = {}
-        frames = [pdf.dropna(subset=["value"]) for pdf in pdf_iter]
-        frames = [pdf for pdf in frames if len(pdf)]
-        if not frames:
-            if not st:
-                state.remove()
-                return iter(())
-            # arrays unchanged; keep state as-is (re-update for safety)
-            us = sorted(st)
-            state.update((us, [st[u][0] for u in us], [st[u][1] for u in us]))
-            return iter(())
-        batch = pd.concat(frames).sort_values(["user_id", "ts", "event_id"])
-        ou, on, os_ = [], [], []
-        vals_all = batch["value"].to_numpy()
-        for u, idx in batch.groupby("user_id", sort=True).indices.items():
-            u = int(u)
-            ent = st.get(u)
-            s = ent[0] if ent is not None else None
-            n = ent[1] if ent is not None else 0
-            for x in vals_all[idx]:
-                s = x if s is None else alpha * x + (1.0 - alpha) * s
-            n += len(idx)
-            st[u] = [float(s), n]
-            ou.append(u)
-            on.append(n)
-            os_.append(float(s))
-        us = sorted(st)
-        state.update((us, [st[u][0] for u in us], [st[u][1] for u in us]))
-        return iter(
-            (pd.DataFrame({"user_id": ou, "n_events": on, "last_ewma": os_}),)
-        )
-
-    return _fold
-
-
-def ewma_stream_bucketed(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
-    """Apply the bucketed stateful EWMA to a streaming DataFrame with
-    columns (bucket int, user_id long, ts timestamp, event_id long,
-    value double). Emissions per touched user are identical to
-    ewma_stream's."""
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        make_ewma_fold_bucketed(alpha),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_BUCKETED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# Streaming conversion attribution: the per-user state is just the
-# (first, last) non-purchase channel seen so far — O(1) forever — and
-# every purchase emits its credit the moment it arrives, carrying the
-# state ACROSS micro-batches (the batch twin recomputes the whole
-# window every run; this one never re-reads history).
-#
-# Keyed-state granularity is a HASH BUCKET of users, not one user (the
-# heavy_hitters_stream posture): applyInPandasWithState pays one
-# python/Arrow round-trip per KEY per batch, which at 10k users made
-# the per-group overhead — not the arithmetic — the whole cost
-# (measured sf1: 18.7 s per-user keys vs ~5 s bucketed). A bucket's
-# state holds its users' (first, last) pairs as parallel arrays;
-# within the bucket every carry is a C-speed grouped ffill/shift, and
-# users remain fully independent (bucket co-residence never mixes
-# their state).
-_ATTRIB_BUCKETS = 64
-
-ATTRIB_OUTPUT_SCHEMA = (
-    "user_id long, event_id long, last_ch string, first_ch string, "
-    "cents long"
-)
-ATTRIB_STATE_SCHEMA = (
-    "user_ids array<long>, first_chs array<string>, last_chs array<string>"
-)
-
-
-def _attribution_fold(key, pdf_iter, state: GroupState):
-    """Per-bucket fold: rows sort (user_id, ts, event_id); the
-    last-touch as of each row is the grouped ffill of the non-purchase
-    channel shifted one row within the user (exactly the batch twin's
-    rowsBetween(unboundedPreceding, -1) frame), the first-touch the
-    same over a keep-only-first-valid mask; rows whose batch-local
-    carry is empty fall back to the user's carried state, and absent
-    state surfaces as the 'direct' channel. Cents floor(value·100 +
-    0.5) matches the oracle; a NULL value emits a NULL cents (object
-    column → Arrow null), so the sink's SUM skips it exactly as SQL
-    does.
-
-    Ordering bound: the make_ewma_fold contract — within-batch order
-    pinned by the sort, cross-batch order is arrival order; exact
-    under availableNow on the bounded fixture (one in-order batch)."""
-    if state.exists:
-        uids, firsts, lasts = state.get
-        st_first = dict(zip(uids, firsts))
-        st_last = dict(zip(uids, lasts))
-    else:
-        st_first, st_last = {}, {}
-    frames = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values(["user_id", "ts", "event_id"])
-        et = pdf["event_type"]
-        touch = et.where(et != "purchase", other=None)
-        g = touch.groupby(pdf["user_id"], sort=False)
-        # strictly-before last touch within the batch: grouped ffill,
-        # then shift 1 within the user
-        last_asof = g.ffill().groupby(pdf["user_id"], sort=False).shift(1)
-        # strictly-before first touch: keep only each user's first
-        # valid touch, carry it forward, shift 1 within the user
-        first_only = touch.where(g.cumcount() - touch.isna().groupby(pdf["user_id"], sort=False).cumsum() == 0)
-        fg = first_only.groupby(pdf["user_id"], sort=False)
-        first_asof = fg.ffill().groupby(pdf["user_id"], sort=False).shift(1)
-        users = pdf["user_id"]
-        # last-touch: the batch-local carry wins (more recent); the
-        # carried state fills the rows before any batch-local touch
-        last_asof = last_asof.fillna(users.map(st_last).astype(object))
-        # first-touch: pinned forever once set — the CARRIED state wins
-        # over any batch-local first; batch-local only seeds new users
-        first_asof = users.map(st_first).astype(object).fillna(first_asof)
-
-        is_p = (et == "purchase").to_numpy()
-        if is_p.any():
-            v = pdf["value"].to_numpy()[is_p]
-            cents = [
-                None if pd.isna(x) else int(math.floor(x * 100 + 0.5))
-                for x in v
-            ]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "user_id": users.to_numpy()[is_p],
-                        "event_id": pdf["event_id"].to_numpy()[is_p],
-                        "last_ch": [
-                            c if isinstance(c, str) else "direct"
-                            for c in last_asof.to_numpy()[is_p]
-                        ],
-                        "first_ch": [
-                            c if isinstance(c, str) else "direct"
-                            for c in first_asof.to_numpy()[is_p]
-                        ],
-                        "cents": pd.Series(cents, dtype=object),
-                    }
-                )
-            )
-        # fold the batch's touches into the carried state
-        nn = touch.dropna()
-        if len(nn):
-            nu = users[nn.index]
-            batch_last = nn.groupby(nu, sort=False).last()
-            batch_first = nn.groupby(nu, sort=False).first()
-            for u, ch in batch_last.items():
-                st_last[int(u)] = ch
-            for u, ch in batch_first.items():
-                st_first.setdefault(int(u), ch)
-    uids = sorted(st_last)
-    state.update((
-        [int(u) for u in uids],
-        [st_first[u] for u in uids],
-        [st_last[u] for u in uids],
-    ))
-    return iter(frames)
-
-
-def attribution_stream(keyed: DataFrame) -> DataFrame:
-    """Apply the stateful attribution fold to a streaming DataFrame
-    with columns (user_id long, ts timestamp, event_id long,
-    event_type string, value double). Users hash into
-    _ATTRIB_BUCKETS keyed-state buckets (see the module comment on
-    per-key round-trip overhead); the fold keeps users independent
-    inside a bucket."""
-    from pyspark.sql import functions as F
-
-    bucketed = keyed.withColumn(
-        "bucket", (F.col("user_id") % _ATTRIB_BUCKETS).cast("int")
-    )
-    return bucketed.groupBy("bucket").applyInPandasWithState(
-        _attribution_fold,
-        outputStructType=ATTRIB_OUTPUT_SCHEMA,
-        stateStructType=ATTRIB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4's arbitrary-state API): the
-# successor to applyInPandasWithState — typed, NAMED state variables on
-# a StatefulProcessor lifecycle (init/handleInputRows/close), backed by
-# the RocksDB state store. Covered here so the engine exercises BOTH
-# stateful APIs: the processor below is the running per-user totals
-# fold (the simplest correct exemplar of the lifecycle). NOT a
-# registered query: the TWS Python runner needs google.protobuf,
-# which this sandbox lacks — the documented boundary (SURVEY.md §2.3);
-# tests/test_streaming.py carries the full totals-vs-batch parity
-# check and self-skips when protobuf is absent.
-# ---------------------------------------------------------------------------
-
-TWS_OUTPUT_SCHEMA = "user_id long, n_events long, cents long"
-
-
-def make_running_totals_processor():
-    """Factory returning a StatefulProcessor that keeps one ValueState
-    ('totals' = running row count + money cents) per user and emits the
-    updated totals each micro-batch. Import-deferred so the module
-    stays loadable on deployments whose pyspark predates the API."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, cents BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                vals = pdf["value"].dropna()
-                # floor(v*100 + 0.5) on the raw double — the engine's
-                # cents convention (matches the SQL oracle bit-for-bit)
-                cents += int(
-                    sum(int(math.floor(float(x) * 100 + 0.5)) for x in vals)
-                )
-            self._totals.update((int(n), int(cents)))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotalsProcessor()
-
-
-def running_totals_stream(keyed: DataFrame) -> DataFrame:
-    """Apply the transformWithState running-totals processor to a
-    streaming DataFrame with columns (user_id long, ts timestamp,
-    value double). Requires the RocksDB state store provider (see
-    streaming.rocksdb_state_store). Output mode: update."""
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_running_totals_processor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -106,3 +106,20 @@ def test_ntz_normalization_requires_utc_session(spark, tmp_path):
         assert out.schema["ts"].dataType.typeName() == "timestamp"
     finally:
         spark.conf.set(tz_key, old)
+
+
+def test_load_table_is_shared_so_self_joins_alias(spark, sf_dir):
+    """load_table returns the SAME memoized frame on every call, so a
+    self-join must alias each side; the aliased join resolves and
+    pairs every row with itself."""
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.catalog import load_table
+
+    ev = load_table(spark, sf_dir, "events")
+    assert load_table(spark, sf_dir, "events") is ev
+    pairs = ev.alias("l").join(
+        load_table(spark, sf_dir, "events").alias("r"),
+        F.col("l.event_id") == F.col("r.event_id"),
+    )
+    assert pairs.count() == ev.count()

@@ -20,6 +20,23 @@ def _canon(df):
     return sorted(map(tuple, (tuple(r) for r in df.collect())))
 
 
+def _co_resident(spark, candidates, n=2):
+    """The first ``n`` candidate keys that bucketed_fold's own bucket
+    expression puts in one state bucket."""
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.streaming.stateful import state_bucket
+
+    groups = {}
+    for r in (
+        spark.createDataFrame([(c,) for c in candidates], ["k"])
+        .select("k", state_bucket(F.col("k")).alias("b"))
+        .collect()
+    ):
+        groups.setdefault(r["b"], []).append(r["k"])
+    return next(g[:n] for g in groups.values() if len(g) >= n)
+
+
 def test_stream_tumbling_matches_batch(spark, sf_dir):
     batch = tumbling_counts(load_table(spark, sf_dir, "events"))
     stream = tumbling_counts(open_event_stream(spark, sf_dir))
@@ -58,7 +75,7 @@ def test_stateful_dedup_first_wins(spark, sf_dir, tmp_path):
 
     import pandas as pd
 
-    from projektdataengineering_spark.streaming.stateful import dedup_stream_first_wins
+    from projektdataengineering_spark.streaming.stateful import dedup_fold_stream
 
     src = tmp_path / "stream_src"
     src.mkdir()
@@ -90,7 +107,7 @@ def test_stateful_dedup_first_wins(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    out = dedup_stream_first_wins(stream)
+    out = dedup_fold_stream(stream)
     q = (
         out.writeStream.outputMode("update")
         .format("memory")
@@ -146,91 +163,6 @@ def test_foreachbatch_sink_is_idempotent(spark, sf_dir, tmp_path):
     assert n1 == n_batch
 
 
-def test_stateful_sessionizer_carries_sessions_across_batches(spark, sf_dir, tmp_path):
-    """Custom stateful sessionizer: a session straddling two
-    micro-batches must continue (state carry-over), an in-batch gap
-    must close a session, and the final session set must equal the
-    BATCH gaps-and-islands sessionization of the same rows."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from projektdataengineering_spark.streaming.stateful import sessionize_stream
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    # user u: 3 events bridging the batch split (10-min gaps, < 30min),
-    #         then a >30min gap inside batch 2 → second session
-    # user v: one event per batch, 2h apart → two singleton sessions
-    b1 = pd.DataFrame(
-        {
-            "key": ["u", "u", "v"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:00", "2024-01-01 00:10:00", "2024-01-01 00:00:00"]
-            ),
-            "value": [1.0, 2.0, 10.0],
-        }
-    )
-    b2 = pd.DataFrame(
-        {
-            "key": ["u", "u", "v"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:20:00", "2024-01-01 01:30:00", "2024-01-01 02:00:00"]
-            ),
-            "value": [4.0, 8.0, 20.0],
-        }
-    )
-    b1.to_parquet(src / "b1.parquet", coerce_timestamps="us")
-    b2.to_parquet(src / "b2.parquet", coerce_timestamps="us")
-    now = time.time()
-    os.utime(src / "b1.parquet", (now - 60, now - 60))
-    os.utime(src / "b2.parquet", (now, now))
-
-    stream = (
-        spark.readStream.schema("key string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        sessionize_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sess_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # latest emission per (key, session_start) is the session's truth:
-    # higher n_events is newer; at equal counts closed beats open (a
-    # session only transitions open → closed without gaining events)
-    final = {}
-    for r in spark.table("sess_out").collect():
-        k = (r["key"], r["session_start"])
-        if (
-            k not in final
-            or r["n_events"] > final[k]["n_events"]
-            or (r["n_events"] == final[k]["n_events"] and not r["is_open"])
-        ):
-            final[k] = r
-    sessions = {
-        k: (r["n_events"], r["session_last"], r["sum_value"], r["is_open"])
-        for k, r in final.items()
-    }
-    T = pd.Timestamp
-    assert sessions == {
-        # u session 1: 00:00→00:20 spans BOTH batches (3 events, carried)
-        ("u", T("2024-01-01 00:00:00")): (3, T("2024-01-01 00:20:00"), 7.0, False),
-        # u session 2: opened by the 01:30 event after the >30min gap
-        ("u", T("2024-01-01 01:30:00")): (1, T("2024-01-01 01:30:00"), 8.0, True),
-        # v: two singleton sessions 2h apart
-        ("v", T("2024-01-01 00:00:00")): (1, T("2024-01-01 00:00:00"), 10.0, False),
-        ("v", T("2024-01-01 02:00:00")): (1, T("2024-01-01 02:00:00"), 20.0, True),
-    }, sessions
-
-
 def test_stream_ewma_equals_batch_ewma(spark, sf_dir):
     """The stateful streaming EWMA must reproduce the batch operator's
     fold bit-for-bit on a bounded in-order fixture (same alpha, same
@@ -253,19 +185,17 @@ def test_stream_ewma_equals_batch_ewma(spark, sf_dir):
 
 def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
     """Bounded dedup horizon (round-7): a key idle past the horizon is
-    EVICTED from keyed state once the watermark passes last_seen +
-    horizon (Spark fires the timeout at the next micro-batch in which
-    the key has no data), and its next occurrence re-emits as a fresh
-    first (n_dropped restarts at 0). Keys active within the horizon
-    keep their state across the same boundary. The state-store row
-    counts come straight from the stateful operator's progress
-    metrics — the MEASURED state bound."""
+    swept from keyed state once the watermark passes last_seen +
+    horizon, and its next occurrence re-emits as a fresh first
+    (n_dropped restarts at 0). Keys active within the horizon keep
+    their state across the same boundary. State rows count buckets,
+    not keys, so the contract is asserted on the emitted rows."""
     import os
     import time
 
     import pandas as pd
 
-    from projektdataengineering_spark.streaming.stateful import dedup_stream_first_wins
+    from projektdataengineering_spark.streaming.stateful import dedup_fold_stream
 
     src = tmp_path / "stream_src"
     src.mkdir()
@@ -276,8 +206,9 @@ def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
         # b2: 10 days later (horizon = 2 days) — a returns (stays warm),
         # c is new; advances the watermark past b's expiry
         (["a", "c"], ["2024-01-11 00:00:00", "2024-01-11 00:01:00"]),
-        # b3: unrelated key d — the batch where b has NO data and its
-        # expired timeout actually fires (Spark evicts lazily)
+        # b3: unrelated key d — the first batch whose watermark is
+        # past b's deadline: b's bucket is swept (by its timeout, or
+        # eagerly if d shares the bucket)
         (["d"], ["2024-01-11 00:02:00"]),
         # b4: b returns after eviction — must re-emit as a fresh FIRST
         (["b"], ["2024-01-12 00:00:00"]),
@@ -296,7 +227,7 @@ def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
         .parquet(str(src))
         .withWatermark("ts", "1 second")
     )
-    out = dedup_stream_first_wins(stream, horizon="2 days")
+    out = dedup_fold_stream(stream, horizon="2 days")
     q = (
         out.writeStream.outputMode("update")
         .format("memory")
@@ -307,16 +238,12 @@ def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
     )
     q.awaitTermination()
 
-    state_rows = [
-        p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress
-    ]
-    # 5 state creations happen over the run (a, b, c, d, b-again) but
-    # they never all coexist: b is evicted in batch 3, so the store
-    # holds exactly [2, 3, 3, 4] over the data batches (availableNow
-    # may append a trailing empty batch) and peaks at 4.
-    assert state_rows[:4] == [2, 3, 3, 4] and max(state_rows) == 4, state_rows
-
     rows = spark.table("dedup_horizon_out").collect()
+    # c and d are single fresh firsts
+    assert {(r["key"], r["n_dropped"]) for r in rows if r["key"] in ("c", "d")} == {
+        ("c", 0),
+        ("d", 0),
+    }, rows
     b_rows = {(r["first_ts"], r["n_dropped"]) for r in rows if r["key"] == "b"}
     # re-emission as a FIRST after eviction: the post-horizon arrival
     # carries its own ts and n_dropped=0 (surviving state would have
@@ -404,7 +331,7 @@ def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
 
     import pandas as pd
 
-    from projektdataengineering_spark.streaming.stateful import dedup_stream_first_wins
+    from projektdataengineering_spark.streaming.stateful import dedup_fold_stream
 
     src = tmp_path / "late_src"
     src.mkdir()
@@ -417,7 +344,8 @@ def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
         # b3: watermark advances to Jan-16 — past the buggy Jan-12
         # deadline, NOT past the correct Jan-22 one
         (["z"], ["2024-02-15 00:00:00"]),
-        # b4: a has no data; a buggy timeout would fire here and evict
+        # b4: the first batch whose watermark (Jan-16) passes the buggy
+        # deadline — a buggy sweep would evict a here
         (["z"], ["2024-02-15 00:01:00"]),
         # b5: a returns within wm — must still be a DUPLICATE of Jan-20
         (["a"], ["2024-02-16 00:00:00"]),
@@ -436,7 +364,7 @@ def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
         .parquet(str(src))
         .withWatermark("ts", "30 days")
     )
-    out = dedup_stream_first_wins(stream, horizon="2 days")
+    out = dedup_fold_stream(stream, horizon="2 days")
     q = (
         out.writeStream.outputMode("update")
         .format("memory")
@@ -459,20 +387,22 @@ def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
     }, a_rows
 
 
-def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
-    """Streaming CDC fold (streaming/stateful.py:cdc_apply_stream) across
-    ordered micro-batches: generation counts must carry over a batch
-    boundary, a tombstone at a boundary must close the generation, and
-    a post-tombstone re-insert in a LATER batch must open a fresh one."""
+def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path):
+    """The CDC fold (cdc_fold_stream) across ordered micro-batches:
+    generation counts must carry over a batch boundary, a tombstone at
+    a boundary must close the generation, and a post-tombstone
+    re-insert in a LATER batch must open a fresh one — with the two
+    keys sharing one state bucket kept fully independent."""
     import os
     import time
 
     import pandas as pd
 
-    from projektdataengineering_spark.streaming.stateful import cdc_apply_stream
+    from projektdataengineering_spark.streaming.stateful import cdc_fold_stream
+
+    u1, u2 = _co_resident(spark, [f"u{i}" for i in range(200)])
 
     def rows(eid0, ts0, spec):
-        # spec: list of (key, event_type); timestamps strictly increasing
         return pd.DataFrame(
             {
                 "key": [k for k, _ in spec],
@@ -483,10 +413,10 @@ def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
         )
 
     # batch 1: u1 upserts twice; u2 upsert then tombstone (dead at boundary)
-    b1 = rows(0, 0, [("u1", "click"), ("u2", "view"), ("u1", "view"), ("u2", "error")])
+    b1 = rows(0, 0, [(u1, "click"), (u2, "view"), (u1, "view"), (u2, "error")])
     # batch 2: u1 tombstone then re-insert (fresh generation);
     #          u2 re-inserts after its batch-1 tombstone
-    b2 = rows(10, 100, [("u1", "error"), ("u1", "purchase"), ("u2", "click"), ("u2", "view")])
+    b2 = rows(10, 100, [(u1, "error"), (u1, "purchase"), (u2, "click"), (u2, "view")])
     src = tmp_path / "cdc_src"
     src.mkdir()
     now = time.time()
@@ -501,7 +431,7 @@ def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
         .parquet(str(src))
     )
     q = (
-        cdc_apply_stream(stream)
+        cdc_fold_stream(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("cdc_stream_out")
@@ -512,103 +442,34 @@ def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
     q.awaitTermination()
 
     out = spark.table("cdc_stream_out").toPandas()
-    final = {
-        r["key"]: r
-        for _, r in out.sort_values("n_seen").iterrows()  # last update wins
-    }
-    u1, u2 = final["u1"], final["u2"]
+    final = {r["key"]: r for _, r in out.sort_values("n_seen").iterrows()}  # last update wins
+    f1, f2 = final[u1], final[u2]
     # u1: 2 upserts | tombstone + re-insert -> 1 tombstone, alive,
     # open generation has exactly the re-inserted row
-    assert (u1["n_tombstones"], u1["alive"], u1["gen_events"], u1["n_seen"]) == (1, True, 1, 4)
-    assert u1["last_event_type"] == "purchase"
+    assert (f1["n_tombstones"], f1["alive"], f1["gen_events"], f1["n_seen"]) == (1, True, 1, 4)
+    assert f1["last_event_type"] == "purchase"
     # u2: upsert+tombstone | 2 re-inserts -> dead at the boundary, then
     # a fresh 2-event generation
-    assert (u2["n_tombstones"], u2["alive"], u2["gen_events"], u2["n_seen"]) == (1, True, 2, 4)
+    assert (f2["n_tombstones"], f2["alive"], f2["gen_events"], f2["n_seen"]) == (1, True, 2, 4)
     # and the mid-stream state after batch 1 must have shown u2 dead
-    mid = out[(out["key"] == "u2") & (out["n_seen"] == 2)].iloc[0]
+    mid = out[(out["key"] == u2) & (out["n_seen"] == 2)].iloc[0]
     assert not mid["alive"] and mid["gen_events"] == 0 and mid["n_tombstones"] == 1
 
 
-def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path):
-    """The r19 BUCKETED CDC fold (cdc_apply_stream_bucketed) must run the
-    identical per-key state machine as the per-key reference across
-    ordered micro-batches — generation carry-over, tombstone at a
-    boundary, post-tombstone re-insert — with keys sharing one state
-    bucket kept fully independent."""
+def test_stream_ewma_carries_state_across_batches(spark, tmp_path):
+    """The EWMA fold (ewma_fold_stream) must carry (n, s) across
+    micro-batches with the scalar recurrence, keep co-resident users'
+    state apart, skip NULL values — and still emit a row for a user
+    whose only rows in a batch are NULL (one row per key of the batch
+    that has state)."""
     import os
     import time
 
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from projektdataengineering_spark.streaming.stateful import (
-        cdc_apply_stream_bucketed,
-    )
+    from projektdataengineering_spark.streaming.stateful import ewma_fold_stream
 
-    def rows(eid0, ts0, spec):
-        return pd.DataFrame(
-            {
-                "key": [k for k, _ in spec],
-                "ts": [pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=ts0 + i) for i in range(len(spec))],
-                "event_id": [eid0 + i for i in range(len(spec))],
-                "event_type": [t for _, t in spec],
-            }
-        )
-
-    # same fixture as the per-key test — u1/u2 land in ONE bucket
-    b1 = rows(0, 0, [("u1", "click"), ("u2", "view"), ("u1", "view"), ("u2", "error")])
-    b2 = rows(10, 100, [("u1", "error"), ("u1", "purchase"), ("u2", "click"), ("u2", "view")])
-    src = tmp_path / "cdc_bucketed_src"
-    src.mkdir()
-    now = time.time()
-    for i, b in enumerate([b1, b2]):
-        f = src / f"batch{i + 1}.parquet"
-        b.astype({"ts": "datetime64[us]"}).to_parquet(f)
-        os.utime(f, (now - 40 + 20 * i, now - 40 + 20 * i))
-
-    stream = (
-        spark.readStream.schema("key string, ts timestamp, event_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withColumn("bucket", F.lit(0).cast("int"))
-    )
-    q = (
-        cdc_apply_stream_bucketed(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("cdc_bucketed_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_cdc_bucketed"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    out = spark.table("cdc_bucketed_out").toPandas()
-    final = {r["key"]: r for _, r in out.sort_values("n_seen").iterrows()}
-    u1, u2 = final["u1"], final["u2"]
-    # identical assertions to the per-key reference test
-    assert (u1["n_tombstones"], u1["alive"], u1["gen_events"], u1["n_seen"]) == (1, True, 1, 4)
-    assert u1["last_event_type"] == "purchase"
-    assert (u2["n_tombstones"], u2["alive"], u2["gen_events"], u2["n_seen"]) == (1, True, 2, 4)
-    mid = out[(out["key"] == "u2") & (out["n_seen"] == 2)].iloc[0]
-    assert not mid["alive"] and mid["gen_events"] == 0 and mid["n_tombstones"] == 1
-
-
-def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path):
-    """The r19 bucketed EWMA fold must carry (s, n) across micro-batches
-    and produce bit-equal finals to the per-key reference operator on
-    the same two-batch ordered stream (bucket co-residence must not mix
-    users' state)."""
-    import os
-    import time
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from projektdataengineering_spark.streaming.stateful import (
-        ewma_stream,
-        ewma_stream_bucketed,
-    )
+    u1, u2, u3, u4 = _co_resident(spark, list(range(1, 2000)), n=4)
 
     def rows(eid0, ts0, spec):
         return pd.DataFrame(
@@ -620,9 +481,10 @@ def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path):
             }
         )
 
-    b1 = rows(0, 0, [(1, 10.0), (2, 5.0), (1, None), (1, 7.0)])
-    b2 = rows(10, 100, [(2, 1.0), (1, 3.0), (3, 2.5), (2, None)])
-    src = tmp_path / "ewma_bucketed_src"
+    b1 = rows(0, 0, [(u1, 10.0), (u2, 5.0), (u1, None), (u1, 7.0), (u4, 6.0)])
+    # u4's only batch-2 row is NULL: its carried state is re-emitted
+    b2 = rows(10, 100, [(u2, 1.0), (u1, 3.0), (u3, 2.5), (u2, None), (u4, None)])
+    src = tmp_path / "ewma_src"
     src.mkdir()
     now = time.time()
     for i, b in enumerate([b1, b2]):
@@ -630,38 +492,37 @@ def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path):
         b.astype({"ts": "datetime64[us]"}).to_parquet(f)
         os.utime(f, (now - 40 + 20 * i, now - 40 + 20 * i))
 
-    def read():
-        return (
-            spark.readStream.schema("user_id long, ts timestamp, event_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-
-    def drain(df, name):
-        q = (
-            df.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        pdf = spark.table(name).toPandas()
-        return {
-            int(r["user_id"]): (int(r["n_events"]), r["last_ewma"])
-            for _, r in pdf.sort_values("n_events").iterrows()  # last wins
-        }
-
-    per_key = drain(ewma_stream(read(), alpha=0.25), "ewma_ref_out")
-    bucketed = drain(
-        ewma_stream_bucketed(
-            read().withColumn("bucket", F.lit(0).cast("int")), alpha=0.25
-        ),
-        "ewma_bucketed_out",
+    stream = (
+        spark.readStream.schema("user_id long, ts timestamp, event_id long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
     )
-    assert per_key == bucketed
-    assert per_key[1] == (3, 0.25 * 3.0 + 0.75 * (0.25 * 7.0 + 0.75 * 10.0))
+    q = (
+        ewma_fold_stream(stream, alpha=0.25)
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("ewma_stream_out")
+        .option("checkpointLocation", str(tmp_path / "ckpt_ewma"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    got = sorted(
+        (r["user_id"], r["n_events"], r["last_ewma"])
+        for r in spark.table("ewma_stream_out").collect()
+    )
+    assert got == sorted([
+        # batch 1
+        (u1, 2, 0.25 * 7.0 + 0.75 * 10.0),
+        (u2, 1, 5.0),
+        (u4, 1, 6.0),
+        # batch 2
+        (u1, 3, 0.25 * 3.0 + 0.75 * (0.25 * 7.0 + 0.75 * 10.0)),
+        (u2, 2, 0.25 * 1.0 + 0.75 * 5.0),
+        (u3, 1, 2.5),
+        (u4, 1, 6.0),
+    ]), got
 
 
 def test_attribution_stream_carries_touch_state_across_batches(spark, tmp_path):
@@ -808,66 +669,55 @@ def test_drop_duplicates_within_watermark_evicts_and_resurrects(spark, tmp_path)
 
 
 def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
-    """Bucketed dedup twin (round 12 — streaming/stateful.py
-    dedup_stream_first_wins_bucketed): keys sharing a state bucket must
+    """Dedup through bucketed_fold: keys sharing a state bucket must
     stay fully independent, carry first_ts/n_dropped across
-    micro-batches exactly like the per-key operator, and honor the
-    EAGER horizon sweep — a key whose (max_ts + horizon) the watermark
-    passed is removed at the bucket's next invocation even when the
-    key itself arrives with data in that same batch, so the re-arrival
-    is a fresh first (stricter than Spark's lazy per-key timeout)."""
+    micro-batches, and honor the EAGER horizon sweep — a key whose
+    (max_ts + horizon) the watermark passed is removed at the bucket's
+    next invocation even when the key itself arrives with data in that
+    same batch, so the re-arrival is a fresh first (stricter than
+    Spark's lazy per-key timeout, which never fires for a key that has
+    data)."""
     import os
     import time
 
     import pandas as pd
 
-    from projektdataengineering_spark.streaming.stateful import (
-        dedup_stream_first_wins_bucketed,
-    )
+    from projektdataengineering_spark.streaming.stateful import dedup_fold_stream
 
+    a, b = _co_resident(spark, [f"k{i}" for i in range(200)])
     src = tmp_path / "bucketed_src"
     src.mkdir()
     batches = [
-        # b1: a (in-batch dup) and b share bucket 0; c sits in bucket 1
-        (["a", "a", "b", "c"],
+        # b1: a (in-batch dup) and b share one bucket; c is anywhere
+        ([a, a, b, "c"],
          ["2024-01-01 00:00:00", "2024-01-01 00:10:00",
           "2024-01-01 00:05:00", "2024-01-01 00:06:00"]),
         # b2: watermark spacer 10 days out (horizon 2 days, watermark
         # 1 second; the watermark visible to a batch is the PREVIOUS
-        # batch's max − delay, so this advances it for b3). Bucket 1's
-        # invocation also sweeps the idle c here.
+        # batch's max − delay, so this advances it for b3)
         (["z"], ["2024-01-11 00:00:00"]),
         # b3: a re-arrives WITH data in the very batch whose sweep
         # removes it (deadline Jan-3 < watermark Jan-10) — the EAGER
-        # case: a fresh first, where the per-key lazy timeout would
-        # have counted a duplicate (timeouts never fire for a key
-        # that has data). b is swept idle by the same invocation.
-        (["a"], ["2024-01-12 00:00:00"]),
+        # case: a fresh first. b is swept idle by the same invocation.
+        ([a], ["2024-01-12 00:00:00"]),
         # b4: b returns after its sweep — fresh first too
-        (["b"], ["2024-01-12 06:00:00"]),
+        ([b], ["2024-01-12 06:00:00"]),
     ]
     now = time.time()
     for i, (keys, tss) in enumerate(batches):
         f = src / f"batch{i + 1}.parquet"
-        pd.DataFrame(
-            {
-                "bucket": pd.array(
-                    [0 if k in ("a", "b") else 1 for k in keys], dtype="int32"
-                ),
-                "key": keys,
-                "ts": pd.to_datetime(tss),
-            }
-        ).to_parquet(f, coerce_timestamps="us")
-        # (bucket 0 = {a, b}; bucket 1 = {c, z})
+        pd.DataFrame({"key": keys, "ts": pd.to_datetime(tss)}).to_parquet(
+            f, coerce_timestamps="us"
+        )
         os.utime(f, (now - 80 + 20 * i, now - 80 + 20 * i))
 
     stream = (
-        spark.readStream.schema("bucket int, key string, ts timestamp")
+        spark.readStream.schema("key string, ts timestamp")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
         .withWatermark("ts", "1 second")
     )
-    out = dedup_stream_first_wins_bucketed(stream, horizon="2 days")
+    out = dedup_fold_stream(stream, horizon="2 days")
     q = (
         out.writeStream.outputMode("update")
         .format("memory")
@@ -885,20 +735,18 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
             (r["first_ts"], r["n_dropped"])
         )
     # a: in-batch dup in b1, then the EAGER-sweep fresh first in b3 —
-    # swept and re-seeded in ONE bucket invocation, which the per-key
-    # operator's lazy timeout cannot do
-    assert by_key["a"] == {
+    # swept and re-seeded in ONE bucket invocation
+    assert by_key[a] == {
         (pd.Timestamp("2024-01-01 00:00:00"), 1),
         (pd.Timestamp("2024-01-12 00:00:00"), 0),
-    }, by_key["a"]
-    # b: swept idle during b3's bucket-0 invocation (a's batch — keys
-    # in a bucket are independent but share sweeps) → fresh first in b4
-    assert by_key["b"] == {
+    }, by_key[a]
+    # b: swept idle during b3's invocation of the shared bucket (a's
+    # batch — keys in a bucket are independent but share sweeps) →
+    # fresh first in b4
+    assert by_key[b] == {
         (pd.Timestamp("2024-01-01 00:05:00"), 0),
         (pd.Timestamp("2024-01-12 06:00:00"), 0),
-    }, by_key["b"]
-    # c: swept idle during b2's bucket-1 invocation, never returns —
-    # only the b1 first remains; z is b2's fresh first
+    }, by_key[b]
     assert by_key["c"] == {(pd.Timestamp("2024-01-01 00:06:00"), 0)}
     assert by_key["z"] == {(pd.Timestamp("2024-01-11 00:00:00"), 0)}
 
@@ -974,70 +822,6 @@ def test_session_window_merges_across_micro_batches(spark, tmp_path):
     }, rows
 
 
-def test_transform_with_state_running_totals_or_documented_absence(
-    spark, sf_dir, tmp_path
-):
-    """transformWithState (Spark 4's arbitrary-state API,
-    streaming/stateful.py running_totals_stream) — availability-gated
-    like the Avro/JDBC boundaries: its Python runner initializes a
-    protobuf-based state channel, and this sandbox ships no usable
-    google.protobuf, so the query cannot execute here
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). On a deployment
-    with protobuf this runs the full check: RocksDB-backed ValueState
-    running totals under availableNow must equal the batch aggregate.
-    The boundary is documented in SURVEY.md §2.3."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf not importable — transformWithState's "
-            "Python runner cannot initialize in this sandbox; boundary "
-            "documented in SURVEY.md §2.3 (the spark-avro discipline)"
-        )
-
-    import math
-
-    from pyspark.sql import functions as F
-
-    from projektdataengineering_spark.streaming import (
-        open_event_stream,
-        rocksdb_state_store,
-        run_to_memory_sink,
-        stream_state_partitions,
-    )
-    from projektdataengineering_spark.streaming.stateful import (
-        running_totals_stream,
-    )
-
-    keyed = open_event_stream(spark, sf_dir).select("user_id", "ts", "value")
-    with stream_state_partitions(spark), rocksdb_state_store(spark):
-        run_to_memory_sink(
-            running_totals_stream(keyed), "tws_totals_out", output_mode="update"
-        )
-    got = {
-        r["user_id"]: (r["n_events"], r["cents"])
-        for r in spark.table("tws_totals_out")
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("cents", "n_events").alias("cents"),
-        )
-        .collect()
-    }
-    from projektdataengineering_spark.catalog import load_table
-
-    exp = {}
-    for r in load_table(spark, sf_dir, "events").select("user_id", "value").collect():
-        n, c = exp.get(r["user_id"], (0, 0))
-        exp[r["user_id"]] = (
-            n + 1,
-            c + (0 if r["value"] is None else int(math.floor(r["value"] * 100 + 0.5))),
-        )
-    assert got == exp
-
-
 def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path):
     """Round-12 review regression: horizon=None (NoTimeout) on a
     NON-watermarked stream must work — the fold may only read the
@@ -1045,15 +829,12 @@ def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path):
     raises without withWatermark)."""
     import pandas as pd
 
-    from projektdataengineering_spark.streaming.stateful import (
-        dedup_stream_first_wins_bucketed,
-    )
+    from projektdataengineering_spark.streaming.stateful import dedup_fold_stream
 
     src = tmp_path / "nohorizon_src"
     src.mkdir()
     pd.DataFrame(
         {
-            "bucket": pd.array([0, 0, 1], dtype="int32"),
             "key": ["a", "a", "b"],
             "ts": pd.to_datetime(
                 ["2024-01-01 00:00:00", "2024-01-01 00:10:00",
@@ -1062,11 +843,9 @@ def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path):
         }
     ).to_parquet(src / "b1.parquet", coerce_timestamps="us")
 
-    stream = spark.readStream.schema("bucket int, key string, ts timestamp").parquet(
-        str(src)
-    )
+    stream = spark.readStream.schema("key string, ts timestamp").parquet(str(src))
     q = (
-        dedup_stream_first_wins_bucketed(stream)  # no horizon, no watermark
+        dedup_fold_stream(stream)  # no horizon, no watermark
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("dedup_nohorizon_out")
@@ -1081,3 +860,71 @@ def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path):
         ("a", pd.Timestamp("2024-01-01 00:00:00"), 1),
         ("b", pd.Timestamp("2024-01-01 00:05:00"), 0),
     }, rows
+
+
+class _FakeGroupState:
+    """Just enough of GroupState to drive bucketed_fold's state function
+    outside Spark."""
+
+    def __init__(self, wm_ms):
+        self.exists, self.hasTimedOut, self.get = False, False, None
+        self.wm_ms, self.deadline_ms = wm_ms, None
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+    def remove(self):
+        self.exists, self.get = False, None
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.deadline_ms = ms
+
+
+def test_bucketed_fold_pins_event_time_unit():
+    """The same rows as datetime64[ns] and as datetime64[us] (the unit
+    newer pandas/Arrow deliver) must leave identical state and arm an
+    identical timeout: event time is converted to µs by unit, never by
+    assuming nanoseconds."""
+    import pandas as pd
+
+    from projektdataengineering_spark.streaming.stateful import (
+        _first_wins,
+        _fold_state_fn,
+    )
+
+    ts = pd.to_datetime(["2024-01-01 00:00:00", "2024-01-01 00:10:00", "2024-01-02 00:00:00"])
+    wm_ms = int(pd.Timestamp("2023-12-31").value // 1_000_000)
+    horizon_us = int(pd.Timedelta("2 days").value // 1_000)
+    results = []
+    for unit in ("ns", "us"):
+        pdf = pd.DataFrame(
+            {"key": ["a", "a", "b"], "ts": ts.astype(f"datetime64[{unit}]"), "_bucket": 0}
+        )
+        state = _FakeGroupState(wm_ms)
+        fn = _fold_state_fn("key", _first_wins, ["first_us", "n_dropped"], (), horizon_us, False)
+        (out,) = list(fn((0,), iter([pdf]), state))
+        results.append((state.get, state.deadline_ms, out.values.tolist()))
+    assert results[0] == results[1], results
+    jan1_us = int(pd.Timestamp("2024-01-01").value // 1_000)
+    keys, first_us, n_dropped, max_us = results[0][0]
+    assert (keys, first_us, n_dropped) == (["a", "b"], [jan1_us, jan1_us + 86_400_000_000], [1, 0])
+    # the bucket's timeout is the earliest key deadline: a's last
+    # occurrence (00:10) + 2 days
+    assert results[0][1] == (jan1_us + 600_000_000 + horizon_us) // 1_000
+
+
+def test_event_schema_memo_is_per_session(spark, sf_dir):
+    """open_event_stream's schema memo lives on the session, like
+    catalog.load_table's scan memo: a new session never sees another
+    session's entries."""
+    from projektdataengineering_spark.streaming import _event_schema_for
+
+    path = f"{sf_dir}/events.parquet"
+    schema = _event_schema_for(spark, path)
+    assert _event_schema_for(spark, path) is schema  # memo hit
+    other = spark.newSession()
+    assert not getattr(other, "_pde_event_schema_memo", None)
+    assert _event_schema_for(other, path) is not schema

@@ -453,7 +453,7 @@ def main() -> int:
             "recall certifications; pipeline_shuffle_shard 0.36 s), "
             "and the residual ~15 s is broad shallow drift "
             "concentrated in untouched files (scan_gzip_roundtrip, "
-            "scalar_variant, stream_* stateful twins — the usual "
+            "scalar_variant, the stream_* stateful folds — the usual "
             "suspects of the measured drift band). The committed "
             "BENCH_full.json carries the min-warm pass of the A/B.\n"
         )
