@@ -266,6 +266,7 @@ def _n_passes(argv: list[str]) -> int:
 def main() -> int:
     from projektdataengineering_spark.queries import load_registry
     from projektdataengineering_spark.session import get_spark
+    from projektdataengineering_spark.state import state_path
 
     n_passes = _n_passes(sys.argv[1:])
     calib_start = _calibrate()  # host-speed probe, outside the suite timer
@@ -291,9 +292,7 @@ def main() -> int:
         # queries absorb ~5 s of one-time codegen into pass 0 (measured
         # r6: all three "regressed" +0.3-0.6 s for exactly this reason
         # — min-of-2-passes still included one cold component).
-        warm_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch", "bench_warmup"
-        )
+        warm_dir = state_path("bench_warmup")
         tiny = spark.range(10).selectExpr(
             "id", "cast(id as string) s", "timestamp'2024-01-01' ts"
         )

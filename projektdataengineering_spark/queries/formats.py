@@ -12,12 +12,12 @@ reading the ORIGINAL parquet. A lossy serializer, a mis-parsed
 timestamp, or a float that fails to survive text encoding breaks the
 hash.
 
-Scratch layout: each query owns `<repo>/.scratch/formats/<name>`,
-rewritten (overwrite mode) on every call — idempotent, safe under
-driver re-runs. Text formats pin `timestampFormat` with microsecond
-precision on BOTH write and read; doubles rely on shortest-round-trip
-encoding (Spark writes Java's Double.toString, which parses back
-bit-equal).
+Scratch layout: each query owns `state_path("formats", <name>_<scale>)`
+(projektdataengineering_spark/state.py), rewritten (overwrite mode) on
+every call — idempotent, safe under driver re-runs. Text formats pin
+`timestampFormat` with microsecond precision on BOTH write and read;
+doubles rely on shortest-round-trip encoding (Spark writes Java's
+Double.toString, which parses back bit-equal).
 
 At 100 TB the interesting property is that these are *plans*, not
 utilities: the read side is a normal DataFrame scan, so partition
@@ -34,13 +34,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import SQL_DSUM, dsum
+from ..state import publish, state_path
 from . import query
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
-    "formats",
-)
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -48,7 +43,7 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 def _scratch_dir(name: str, sf_dir: str) -> str:
     # one scratch per (query, scale) so sf0.001 tests and the sf0.01
     # driver run never clobber each other mid-flight
-    return os.path.join(_SCRATCH, f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
+    return state_path("formats", f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
 
 
 # ---------------------------------------------------------------------------
@@ -515,14 +510,7 @@ _LEDGER_SCHEMA = "row_id bigint, bucket int, payload string"
 
 
 def _ledger_workdir(kind: str) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ledgersink",
-        f"{kind}_r{_PYSTREAM_ROWS}_b{_PYSTREAM_BATCH}",
-    )
+    return state_path("ledgersink", f"{kind}_r{_PYSTREAM_ROWS}_b{_PYSTREAM_BATCH}")
 
 
 def _ledger_run_complete(path: str, pattern: str) -> bool:
@@ -795,10 +783,12 @@ def pipeline_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write('{"row_id": -1, "bucket": -1, "payload": "x"}\n')
 
         stats = vacuum_ledger(path, older_than=1.0)
-        tmp = f"{marker}.{os.getpid()}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(stats, fh, sort_keys=True)
-        os.replace(tmp, marker)
+
+        def write_marker(stage: str) -> None:
+            with open(stage, "w") as fh:
+                json.dump(stats, fh, sort_keys=True)
+
+        publish(write_marker, marker)
 
     with open(marker) as fh:
         stats = json.load(fh)

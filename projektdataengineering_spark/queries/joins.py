@@ -519,6 +519,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from ..sources import ensure_bucketed, source_fingerprint
+    from ..state import state_path
 
     # Cache tag = fixture basename + CONTENT fingerprint of the source
     # parquets: regenerated fixtures at the same path get a fresh tag
@@ -529,12 +530,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.path.join(sf_dir, "customer.parquet"),
     )
     tag = f"{_os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{fp}"
-    scratch = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
-        ".scratch",
-        "bucketed",
-        tag,
-    )
+    scratch = state_path("bucketed", tag)
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
 

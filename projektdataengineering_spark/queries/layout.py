@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..state import publish, state_path
 from . import query
 
 _BITS = 16
@@ -312,35 +313,7 @@ def _compaction_workdir(sf_dir: str) -> str:
 
     fp = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
     tag = f"{fp}_w{_COMPACT_APPLY_WRITERS}_d{_COMPACT_APPLY_DAYS}"
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "compaction",
-        tag,
-    )
-
-
-def _atomic_dir_write(write_fn, final_path: str) -> None:
-    """Write-once directory install: stage under a process-unique temp
-    path, then one atomic os.rename — the ensure_bucketed/merge_sink
-    staging discipline (sources/merge_sink.py:173-180), so readers
-    never observe a half-written table and a concurrent session's
-    winner (same content by fingerprint keying) is simply kept."""
-    import os
-    import shutil
-    import uuid
-
-    if os.path.isdir(final_path):
-        return
-    tmp = f"{final_path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    write_fn(tmp)
-    try:
-        os.makedirs(os.path.dirname(final_path), exist_ok=True)
-        os.rename(tmp, final_path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(final_path):
-            raise
+    return state_path("compaction", tag)
 
 
 @query("pipeline_compaction_apply", oracle=_COMPACT_APPLY_SQL)
@@ -366,9 +339,9 @@ def pipeline_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory triple first — every leaf's rows land in one task, so
     each leaf holds EXACTLY one parquet file and the on-disk file
     counts are deterministic, not writer-parallelism-dependent. Both
-    tables install via staged write + atomic rename keyed by the
-    events source fingerprint (write-once per fixture version;
-    re-invocations reuse — the ensure_bucketed discipline).
+    tables install via state.publish keyed by the events source
+    fingerprint (write-once per fixture version; re-invocations
+    reuse).
 
     Scale shape: one partitioned shuffle per table write, one
     metadata-only aggregate per manifest side; at 100 TB the manifest
@@ -417,14 +390,13 @@ def pipeline_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    if not os.path.isdir(before_path):
-        src = ev.withColumn("file_id", F.col("event_id") % _COMPACT_APPLY_WRITERS)
-        _atomic_dir_write(
-            lambda p: src.repartition("event_type", "event_date", "file_id")
-            .write.partitionBy("event_type", "event_date", "file_id")
-            .parquet(p),
-            before_path,
-        )
+    src = ev.withColumn("file_id", F.col("event_id") % _COMPACT_APPLY_WRITERS)
+    publish(
+        lambda p: src.repartition("event_type", "event_date", "file_id")
+        .write.partitionBy("event_type", "event_date", "file_id")
+        .parquet(p),
+        before_path,
+    )
 
     if not os.path.isdir(after_path):
         t = _COMPACT_TARGET_BYTES
@@ -451,7 +423,7 @@ def pipeline_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .drop("target_files")
         )
-        _atomic_dir_write(
+        publish(
             lambda p: compacted.repartition("event_type", "event_date", "part_seq")
             .write.partitionBy("event_type", "event_date", "part_seq")
             .parquet(p),
@@ -483,7 +455,7 @@ def pipeline_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("b.n_rows") == F.col("a.n_rows")).alias("row_parity"),
         )
     )
-    _atomic_dir_write(
+    publish(
         lambda p: result.coalesce(1).write.parquet(p), manifest_path
     )
     return spark.read.parquet(manifest_path).select(
@@ -527,12 +499,7 @@ def _zorder_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "zorder",
-        f"{fp}_b{_BITS}_f{_N_FILES}",
-    )
+    return state_path("zorder", f"{fp}_b{_BITS}_f{_N_FILES}")
 
 
 @query("pipeline_zorder_apply", oracle=_ZORDER_APPLY_SQL)
@@ -549,7 +516,7 @@ def pipeline_zorder_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match certifies the physical layout equals the plan — same
     execute-then-certify discipline as pipeline_compaction_apply,
     whose staged-write/atomic-rename and frozen-manifest reuse this
-    query shares (_atomic_dir_write; content-addressed by the events
+    query shares (state.publish; content-addressed by the events
     fingerprint + layout parameters).
 
     At 100 TB: the NTILE becomes repartitionByRange(zvalue) +
@@ -584,14 +551,13 @@ def pipeline_zorder_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "file_id", F.ntile(_N_FILES).over(Window.orderBy("zvalue", "event_id"))
     ).select("event_id", "user_id", "value", "zvalue", "file_id")
 
-    if not os.path.isdir(table_path):
-        _atomic_dir_write(
-            lambda p: filed.repartition("file_id")
-            .sortWithinPartitions("zvalue", "event_id")
-            .write.partitionBy("file_id")
-            .parquet(p),
-            table_path,
-        )
+    publish(
+        lambda p: filed.repartition("file_id")
+        .sortWithinPartitions("zvalue", "event_id")
+        .write.partitionBy("file_id")
+        .parquet(p),
+        table_path,
+    )
 
     d = spark.read.parquet(table_path)
     result = d.groupBy(F.col("file_id").cast("int").alias("file_id")).agg(
@@ -604,7 +570,7 @@ def pipeline_zorder_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("zvalue").alias("z_hi"),
         F.countDistinct(F.col("_metadata.file_path")).cast("long").alias("n_files"),
     )
-    _atomic_dir_write(lambda p: result.coalesce(1).write.parquet(p), manifest_path)
+    publish(lambda p: result.coalesce(1).write.parquet(p), manifest_path)
     return spark.read.parquet(manifest_path).select(*cols)
 
 
@@ -729,12 +695,7 @@ def _erasure_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "erasure",
-        fp,
-    )
+    return state_path("erasure", fp)
 
 
 @query("pipeline_gdpr_erasure", oracle=_ERASE_SQL)
@@ -776,11 +737,8 @@ def pipeline_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     is_tomb = F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) == "0"
 
-    if not os.path.isdir(erased_path):
-        keep = ev.filter(~is_tomb)
-        _atomic_dir_write(
-            lambda p: keep.write.parquet(p), erased_path
-        )
+    keep = ev.filter(~is_tomb)
+    publish(lambda p: keep.write.parquet(p), erased_path)
 
     before = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("rows_before"),
@@ -800,7 +758,7 @@ def pipeline_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         "erased_rows",
         "erased_users",
     )
-    _atomic_dir_write(lambda p: result.coalesce(1).write.parquet(p), manifest_path)
+    publish(lambda p: result.coalesce(1).write.parquet(p), manifest_path)
     return spark.read.parquet(manifest_path).select(*cols)
 
 
@@ -897,11 +855,8 @@ def _merge_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "merge_apply",
-        f"{fp}_d{_MERGE_DELTA_DAYS}_b{_MERGE_BUCKETS}",
+    return state_path(
+        "merge_apply", f"{fp}_d{_MERGE_DELTA_DAYS}_b{_MERGE_BUCKETS}"
     )
 
 
@@ -1019,13 +974,12 @@ def pipeline_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base, chg = _merge_state_frames(spark, sf_dir)
 
-    if not os.path.isdir(base_path):
-        _atomic_dir_write(
-            lambda p: base.repartition("bucket")
-            .write.partitionBy("bucket")
-            .parquet(p),
-            base_path,
-        )
+    publish(
+        lambda p: base.repartition("bucket")
+        .write.partitionBy("bucket")
+        .parquet(p),
+        base_path,
+    )
 
     if not os.path.isdir(merged_path):
         # MERGE source ⋈ target: the target is read FROM DISK — the
@@ -1087,7 +1041,7 @@ def pipeline_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                         os.path.join(base_path, name), os.path.join(tmp, name)
                     )
 
-        _atomic_dir_write(write_merged, merged_path)
+        publish(write_merged, merged_path)
 
     b_disk = spark.read.parquet(base_path)
     m_disk = spark.read.parquet(merged_path)
@@ -1130,7 +1084,7 @@ def pipeline_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(rewritten), "bucket")
         .select(*cols)
     )
-    _atomic_dir_write(lambda p: audit.coalesce(1).write.parquet(p), manifest_path)
+    publish(lambda p: audit.coalesce(1).write.parquet(p), manifest_path)
     return spark.read.parquet(manifest_path).select(*cols)
 
 
@@ -1413,7 +1367,7 @@ def pipeline_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
                         os.path.join(merged_path, name), os.path.join(tmp, name)
                     )
 
-        _atomic_dir_write(write_merged2, merged2_path)
+        publish(write_merged2, merged2_path)
 
     def snapshot(version: int, path: str, evolved: bool) -> DataFrame:
         if evolved:
@@ -1533,7 +1487,7 @@ def _build_vtable(spark: SparkSession, sf_dir: str) -> str:
             with open(_vtable_manifest(tmp, version), "w") as fh:
                 json.dump(sorted(refs), fh)
 
-    _atomic_dir_write(stage, root)
+    publish(stage, root)
     return root
 
 

@@ -36,18 +36,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..state import STAGE_INFIX, stage_path
 from . import query
 from .pipeline_ops import _INCR_APPEND_SQL
 from .similarity import _einc_append_oracle, _ivfpq_append_oracle
-
-# Fake pid for the planted crashed-stage directory — a value a real
-# staged write can never race with (pids are recycled, but the plant
-# is created and removed within one invocation). The plant reproduces
-# _atomic_dir_write's ACTUAL crash shape, `{path}.tmp.<pid>.<hex8>`
-# (layout.py:335), so the certified GC row exercises the artifact
-# production really leaves behind.
-_PLANT_PID = 4242
-_PLANT_SUFFIX = f".tmp.{_PLANT_PID}.cafef00d"
 
 
 def _line_members(v1_path: str) -> list[str]:
@@ -55,7 +47,7 @@ def _line_members(v1_path: str) -> list[str]:
     line: v1 itself, every v2 generation (`{v1}_v2*` — geometry-tagged
     or legacy), every RETRAIN generation (`{v1}_g*` — the
     skew-cutover lines), and every staged-write temp of any of them
-    (`.tmp.` infix, the _atomic_dir_write crash shape). A sibling
+    (STAGE_INFIX, the state.publish crash shape). A sibling
     line whose tag merely shares a prefix (e.g. `_b4` vs `_b42`) is
     excluded by requiring the separator."""
     parent, base = os.path.split(v1_path)
@@ -98,7 +90,7 @@ def _vacuum_index_line(v1_path: str, v2_path: str) -> int:
     for d in _line_members(v1_path):
         if d in retained:
             continue
-        if d.startswith(f"{base}_g") and ".tmp." not in d:
+        if d.startswith(f"{base}_g") and STAGE_INFIX not in d:
             continue  # completed retrain generation: live configuration
         full = os.path.join(parent, d)
         # a stray REGULAR file matching the line prefix (an editor
@@ -193,7 +185,7 @@ def commit_generation_cutover(sf_dir: str, live_gen: int) -> int:
         pat = re.compile(re.escape(base) + r"_g(\d+)-")
         for d in sorted(os.listdir(parent)):
             m = pat.match(d)
-            if not m or ".tmp." in d:
+            if not m or STAGE_INFIX in d:
                 continue
             if int(m.group(1)) < live_gen:
                 full = os.path.join(parent, d)
@@ -246,7 +238,7 @@ def pipeline_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     is swept by a PRE-PASS of the same idempotent vacuum — pre-clean +
     vacuum ≡ vacuum — and then exactly ONE orphan is planted per
     family in the crashed-staged-write shape (`{v2}.tmp.<pid>.<hex>`,
-    _atomic_dir_write's actual crash artifact), so expired_generations
+    state.publish's actual crash artifact), so expired_generations
     is 1 by construction, independent of history. Exactly-the-orphans
     deletion, retained-generation byte-identity, decoy-line safety and
     re-vacuum idempotence are pinned by
@@ -290,7 +282,10 @@ def pipeline_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     out: DataFrame | None = None
     for fam, v1, v2, idcol in families:
         _vacuum_index_line(v1, v2)  # pre-clean accumulated history
-        plant = f"{v2}{_PLANT_SUFFIX}"
+        # the stage a publish of v2 that died mid-write leaves, under
+        # a fake pid no real staged write can race with (the plant is
+        # created and removed within this one invocation)
+        plant = stage_path(v2, 4242, "cafef00d")
         shutil.copytree(v1, plant)
         expired = _vacuum_index_line(v1, v2)
         for version, path in ((1, v1), (2, v2)):

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..state import publish, state_path
 from . import query
 
 # First byte of md5(doc_id) partitions [0x00, 0xff] into 80/10/10:
@@ -665,13 +666,8 @@ def _qcls_model_path() -> str:
     deterministically), so the artifact is corpus-independent — it
     ships once per model version, the production posture where the
     fastText .bin is a release artifact, not a per-dataset build."""
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "qcls_model",
-        f"weights_v{_QCLS_MODEL_VERSION}_b{_QCLS_BUCKETS}_n{_QCLS_NUM}",
+    return state_path(
+        "qcls_model", f"weights_v{_QCLS_MODEL_VERSION}_b{_QCLS_BUCKETS}_n{_QCLS_NUM}"
     )
 
 
@@ -687,8 +683,6 @@ def _qcls_weights(spark: SparkSession) -> DataFrame:
     global _QCLS_MODEL_BUILDS
     import os
 
-    from .layout import _atomic_dir_write
-
     path = _qcls_model_path()
     if not os.path.isdir(path):
         pos = lambda h, i: F.expr(
@@ -702,7 +696,7 @@ def _qcls_weights(spark: SparkSession) -> DataFrame:
                 - 128
             ).cast("long").alias("w"),
         )
-        _atomic_dir_write(lambda p: weights.coalesce(1).write.parquet(p), path)
+        publish(lambda p: weights.coalesce(1).write.parquet(p), path)
         _QCLS_MODEL_BUILDS += 1
     return spark.read.parquet(path)
 

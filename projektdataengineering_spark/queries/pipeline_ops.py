@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import SQL_REVENUE, revenue_expr, token_ngrams
+from ..state import publish, state_path
 from . import query
 
 # ---------------------------------------------------------------------------
@@ -2022,15 +2023,10 @@ def _kanon_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "kanon",
-        # _rs = residual-suppression release layout: the tag carries
-        # every semantics knob that shapes the released bytes, so a
-        # layout change can never silently reuse a stale release
-        f"{fp}_k{_KANON_K}_rs",
-    )
+    # _rs = residual-suppression release layout: the tag carries
+    # every semantics knob that shapes the released bytes, so a
+    # layout change can never silently reuse a stale release
+    return state_path("kanon", f"{fp}_k{_KANON_K}_rs")
 
 
 @query("pipeline_kanon_apply", oracle=_KANON_APPLY_SQL)
@@ -2076,8 +2072,6 @@ def pipeline_kanon_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     class audit prunes to its own cell."""
     import os
 
-    from .layout import _atomic_dir_write
-
     base = _kanon_workdir(sf_dir)
     released_path = os.path.join(base, "released")
     manifest_path = os.path.join(base, "manifest")
@@ -2112,9 +2106,8 @@ def pipeline_kanon_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("pub_c")
     )
-    if not os.path.isdir(released_path):
-        rel = final.filter(F.col("level") < 3)
-        _atomic_dir_write(lambda p: rel.write.parquet(p), released_path)
+    rel = final.filter(F.col("level") < 3)
+    publish(lambda p: rel.write.parquet(p), released_path)
 
     per_class = (
         spark.read.parquet(released_path)
@@ -2143,7 +2136,7 @@ def pipeline_kanon_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("min_class_size") >= _KANON_K)
         ).alias("k_ok"),
     )
-    _atomic_dir_write(
+    publish(
         lambda p: result.coalesce(1).write.parquet(p), manifest_path
     )
     return spark.read.parquet(manifest_path).select(*cols)
@@ -2246,12 +2239,7 @@ def _neardup_apply_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "neardup_apply",
-        fp,
-    )
+    return state_path("neardup_apply", fp)
 
 
 @query(
@@ -2303,7 +2291,6 @@ def pipeline_neardup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..operators.graph import connected_components
-    from .layout import _atomic_dir_write
 
     base = _neardup_apply_workdir(sf_dir)
     kept_path = os.path.join(base, "kept")
@@ -2319,21 +2306,20 @@ def pipeline_neardup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source"
     )
     cc = connected_components(_portable_pairs(spark, sf_dir), "doc_a", "doc_b")
-    if not os.path.isdir(kept_path):
-        # no forced broadcast: cluster mass is data-dependent (the
-        # near-dup fraction of the corpus), so the id-only cluster
-        # table is left to AQE — tiny here, persisted + shuffle-joined
-        # at 100 TB — rather than pinned to driver/executor memory
-        keep = (
-            docs.join(
-                cc.select(F.col("node").alias("doc_id"), F.col("comp").alias("cid")),
-                "doc_id",
-                "left",
-            )
-            .filter(F.coalesce(F.col("cid"), F.col("doc_id")) == F.col("doc_id"))
-            .select("doc_id", "text", "lang", "source")
+    # no forced broadcast: cluster mass is data-dependent (the
+    # near-dup fraction of the corpus), so the id-only cluster
+    # table is left to AQE — tiny here, persisted + shuffle-joined
+    # at 100 TB — rather than pinned to driver/executor memory
+    keep = (
+        docs.join(
+            cc.select(F.col("node").alias("doc_id"), F.col("comp").alias("cid")),
+            "doc_id",
+            "left",
         )
-        _atomic_dir_write(lambda p: keep.write.parquet(p), kept_path)
+        .filter(F.coalesce(F.col("cid"), F.col("doc_id")) == F.col("doc_id"))
+        .select("doc_id", "text", "lang", "source")
+    )
+    publish(lambda p: keep.write.parquet(p), kept_path)
 
     before = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("docs_before")
@@ -2358,7 +2344,7 @@ def pipeline_neardup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("kept_id_sum", F.lit(0)).cast("long").alias("kept_id_sum"),
         F.coalesce("kept_token_sum", F.lit(0)).cast("long").alias("kept_token_sum"),
     )
-    _atomic_dir_write(lambda p: result.coalesce(1).write.parquet(p), manifest_path)
+    publish(lambda p: result.coalesce(1).write.parquet(p), manifest_path)
     return spark.read.parquet(manifest_path).select(*cols)
 
 
@@ -2494,11 +2480,8 @@ def _neardup_index_path(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "neardup_index",
-        f"sig_{fp}_l{_PORTABLE_LANES}_b{_INCR_BATCH_POS}",
+    return state_path(
+        "neardup_index", f"sig_{fp}_l{_PORTABLE_LANES}_b{_INCR_BATCH_POS}"
     )
 
 
@@ -2519,15 +2502,13 @@ def _neardup_v2_path(sf_dir: str) -> str:
 
 def _corpus_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-or-build the CORPUS side's signature/band table: built once
-    per corpus version (write-temp + atomic rename, the ensure_bucketed
-    recipe), then every later batch reads (doc_id, m0..m3) straight
+    per corpus version (write-temp + atomic rename, state.publish),
+    then every later batch reads (doc_id, m0..m3) straight
     from parquet — the corpus text is never re-tokenized, re-hashed or
     even re-scanned. At 100 TB this is the difference between an
     O(batch) nightly dedup and an O(corpus) one."""
     global _NEARDUP_INDEX_BUILDS
     import os
-
-    from .layout import _atomic_dir_write
 
     path = _neardup_index_path(sf_dir)
     if not os.path.isdir(path):
@@ -2538,7 +2519,7 @@ def _corpus_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         )
         sig = _signature_of(corpus)
-        _atomic_dir_write(lambda p: sig.write.parquet(p), path)
+        publish(lambda p: sig.write.parquet(p), path)
         _NEARDUP_INDEX_BUILDS += 1
     return spark.read.parquet(path)
 
@@ -2723,8 +2704,6 @@ def dedup_neardup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-sized files — same bound."""
     import os
 
-    from .layout import _atomic_dir_write
-
     v1_path = _neardup_index_path(sf_dir)
     v2_path = _neardup_v2_path(sf_dir)
     # read-or-build v1 UNCONDITIONALLY (no-op read when present): a
@@ -2743,7 +2722,7 @@ def dedup_neardup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", *lanes)
         )
         v2 = v1.select("doc_id", *lanes).unionByName(keepers)
-        _atomic_dir_write(lambda p: v2.write.parquet(p), v2_path)
+        publish(lambda p: v2.write.parquet(p), v2_path)
 
     def audit(version: int, path: str) -> DataFrame:
         idx = spark.read.parquet(path)
@@ -2808,12 +2787,7 @@ def _corpus_delta_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "corpus_delta",
-        fp,
-    )
+    return state_path("corpus_delta", fp)
 
 
 @query("pipeline_corpus_delta", oracle=_DELTA_SQL)
@@ -2848,8 +2822,6 @@ def pipeline_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unit of catalog commit — exactly the reference's weekly
     increment, now safe to replay."""
     import os
-
-    from .layout import _atomic_dir_write
 
     base = _corpus_delta_workdir(sf_dir)
     delta_path = os.path.join(base, "delta")
@@ -2893,11 +2865,10 @@ def pipeline_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality.alias("quality"),
         F.size(F.split("text", " ")).cast("long").alias("n_toks"),
     )
-    if not os.path.isdir(delta_path):
-        admitted = full.filter(F.col("keep") & F.col("quality")).select(
-            "doc_id", "lang", "source", "n_toks"
-        )
-        _atomic_dir_write(lambda p: admitted.write.parquet(p), delta_path)
+    admitted = full.filter(F.col("keep") & F.col("quality")).select(
+        "doc_id", "lang", "source", "n_toks"
+    )
+    publish(lambda p: admitted.write.parquet(p), delta_path)
 
     live = full.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n_batch"),
@@ -2925,7 +2896,7 @@ def pipeline_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_admitted", F.lit(0)).cast("long").alias("n_admitted"),
         F.coalesce("tok_sum", F.lit(0)).cast("long").alias("tok_sum"),
     )
-    _atomic_dir_write(
+    publish(
         lambda p: result.coalesce(1).write.parquet(p), manifest_path
     )
     return spark.read.parquet(manifest_path).select(*cols)
@@ -2970,12 +2941,7 @@ def _stream_delta_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_corpus_delta",
-        f"{fp}_e{_STREAM_DELTA_EPOCHS}",
-    )
+    return state_path("stream_corpus_delta", f"{fp}_e{_STREAM_DELTA_EPOCHS}")
 
 
 @query("stream_corpus_delta", oracle=_STREAM_DELTA_SQL)
@@ -3226,7 +3192,6 @@ def dedup_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources.pysink import read_ledger
-    from .layout import _atomic_dir_write
 
     v1_path = _neardup_index_path(sf_dir)
     v2_path = f"{v1_path}_pub2"
@@ -3247,7 +3212,7 @@ def dedup_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         v2 = v1.select("doc_id", *lanes).unionByName(
             _signature_of(docs).select("doc_id", *lanes)
         )
-        _atomic_dir_write(lambda p: v2.write.parquet(p), v2_path)
+        publish(lambda p: v2.write.parquet(p), v2_path)
 
     def audit(version: int, path: str) -> DataFrame:
         idx = spark.read.parquet(path)

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread_small_input
 from ..functions import token_ngrams
 from ..functions.xxh64 import hash_int, hash_long
+from ..state import publish, state_path
 from . import query
 
 # ---- shared embedding helpers (pure column expressions) ----------------
@@ -703,13 +704,19 @@ def _ivf_index_path(
     tag = f"{fp}_k{k}_i{_IVF_ITERS}_d{_IVF_DIM}"
     if gen:
         tag = f"{tag}{_gen_tag(gen)}"
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ivf",
-        f"centroids_{tag}.npy",
-    )
-    return tag, path
+    return tag, state_path("ivf", f"centroids_{tag}.npy")
+
+
+def _npy_writer(arr: "np.ndarray"):
+    """publish() write_fn for one array. Writes through an open handle:
+    np.save appends ``.npy`` to a path that lacks it, which a stage
+    name does."""
+
+    def write(stage: str) -> None:
+        with open(stage, "wb") as fh:
+            np.save(fh, arr)
+
+    return write
 
 
 def _ivf_centroids(
@@ -718,10 +725,9 @@ def _ivf_centroids(
 ) -> "np.ndarray":
     """Train-once / reuse-forever IVF index: memory cache → on-disk
     ``.npy`` keyed by source fingerprint (+ hyperparams) → Lloyd
-    training as the last resort, persisted via write-temp + atomic
-    rename (the ensure_bucketed recipe — a concurrent session's winner
-    is bit-identical by determinism of the trainer, so losing the race
-    just means loading the winner's file).
+    training as the last resort, installed by state.publish (a
+    concurrent session's winner is bit-identical by determinism of the
+    trainer, so losing the race just means loading the winner's file).
 
     This is the difference between an ANN demo and an ANN system: at
     100 TB the index is built once per corpus version and every query
@@ -741,15 +747,7 @@ def _ivf_centroids(
         _IVF_CENTROID_CACHE[tag] = cents
         return cents
     cents = _ivf_train_centroids(spark, e, k=k)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.{os.getpid()}.tmp.npy"  # .npy suffix: np.save appends otherwise
-    np.save(tmp, cents)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.unlink(tmp)
-        if not os.path.exists(path):  # not a lost race — surface it
-            raise
+    publish(_npy_writer(cents), path)
     _IVF_CENTROID_CACHE[tag] = cents
     return cents
 
@@ -1008,12 +1006,7 @@ def _pq_codebooks(
 
     fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     tag = f"{fp}_pq_m{_PQ_M}_k{_PQ_K}_i{_PQ_ITERS}"
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ivf",
-        f"pqbooks_{tag}.npy",
-    )
+    path = state_path("ivf", f"pqbooks_{tag}.npy")
     if force_disk_reload:
         _PQ_BOOK_CACHE.pop(tag, None)
     cached = _PQ_BOOK_CACHE.get(tag)
@@ -1026,15 +1019,7 @@ def _pq_codebooks(
     global _PQ_TRAIN_RUNS
     _PQ_TRAIN_RUNS += 1
     books = _pq_train_codebooks(spark, e)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.{os.getpid()}.tmp.npy"
-    np.save(tmp, books)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.unlink(tmp)
-        if not os.path.exists(path):
-            raise
+    publish(_npy_writer(books), path)
     _PQ_BOOK_CACHE[tag] = books
     return books
 
@@ -1223,12 +1208,7 @@ def _ivfpq_code_index_path(
     )
     if gen:
         tag = f"{tag}{_gen_tag(gen)}"
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ivfpq_codes",
-        f"codes_{tag}",
-    )
+    return state_path("ivfpq_codes", f"codes_{tag}")
 
 
 def _encode_codes_frame(assigned: DataFrame, books_bc) -> DataFrame:
@@ -1263,7 +1243,7 @@ def _ivfpq_code_index(
     lists WITH the PQ codes, as a parquet table physically partitioned
     by cell (one directory per inverted list — partition pruning IS the
     nprobe cell selection at the storage layer). Built once per corpus
-    version (staged write + atomic rename, _atomic_dir_write); every
+    version (staged write + atomic rename, state.publish); every
     later probe session reads codes straight from parquet and the
     corpus is never re-encoded — the encode-once/probe-forever
     operating mode the 100-TB deployment runs in (the r14 verdict's
@@ -1283,8 +1263,6 @@ def _ivfpq_code_index(
     global _IVFPQ_ENCODE_RUNS
     import os
 
-    from .layout import _atomic_dir_write
-
     path = _ivfpq_code_index_path(sf_dir, k_cells=k_cells, gen=gen)
     if not os.path.isdir(path):
         e = (
@@ -1297,7 +1275,7 @@ def _ivfpq_code_index(
         # one file per inverted list (the faiss layout): the build-time
         # cell shuffle is paid once per corpus version and keeps the
         # probe-side scan from paying per-input-partition small files
-        _atomic_dir_write(
+        publish(
             lambda p: codes.repartition("cell")
             .write.partitionBy("cell")
             .parquet(p),
@@ -2605,12 +2583,7 @@ def _embed_index_path(sf_dir: str) -> str:
 
     fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     tag = f"{fp}_k{_IVF_K}_i{_IVF_ITERS}_d{_IVF_DIM}_b{_EINC_BATCH_POS}"
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "embed_ivf_index",
-        f"cells_{tag}",
-    )
+    return state_path("embed_ivf_index", f"cells_{tag}")
 
 
 def _corpus_cell_index(spark: SparkSession, sf_dir: str, cents_bc) -> DataFrame:
@@ -2623,8 +2596,6 @@ def _corpus_cell_index(spark: SparkSession, sf_dir: str, cents_bc) -> DataFrame:
     global _EMBED_INDEX_BUILDS
     import os
 
-    from .layout import _atomic_dir_write
-
     path = _embed_index_path(sf_dir)
     if not os.path.isdir(path):
         corpus = (
@@ -2633,7 +2604,7 @@ def _corpus_cell_index(spark: SparkSession, sf_dir: str, cents_bc) -> DataFrame:
             .filter(~F.expr(_EINC_SPLIT_SPARK))
         )
         members = _ivf_assign(corpus, cents_bc).select("vec_id", "vec", "cell")
-        _atomic_dir_write(lambda p: members.write.parquet(p), path)
+        publish(lambda p: members.write.parquet(p), path)
         _EMBED_INDEX_BUILDS += 1
     return spark.read.parquet(path)
 
@@ -2828,7 +2799,6 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from .dedup import _TWIN_OFFSET
-    from .layout import _atomic_dir_write
 
     v1_path = _ivfpq_code_index_path(sf_dir)
     v2_path = _ivfpq_code_v2_path(sf_dir)
@@ -2850,7 +2820,7 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tw_codes = _encode_codes_frame(_ivf_assign(twins, bc_c), bc_b)
         v2 = v1.unionByName(tw_codes.select("cell", "vec_id", "codes"))
-        _atomic_dir_write(
+        publish(
             lambda p: v2.repartition("cell")
             .write.partitionBy("cell")
             .parquet(p),
@@ -3034,8 +3004,6 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-sized, cell-partitioned files — same bound."""
     import os
 
-    from .layout import _atomic_dir_write
-
     v1_path = _embed_index_path(sf_dir)
     v2_path = _embed_index_v2_path(sf_dir)
     e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
@@ -3054,7 +3022,7 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "vec", "cell")
         )
         v2 = v1.select("vec_id", "vec", "cell").unionByName(keepers)
-        _atomic_dir_write(lambda p: v2.write.parquet(p), v2_path)
+        publish(lambda p: v2.write.parquet(p), v2_path)
 
     def audit(version: int, path: str) -> DataFrame:
         idx = spark.read.parquet(path)
@@ -3084,12 +3052,7 @@ def _estream_workdir(sf_dir: str) -> str:
     from ..sources import source_fingerprint
 
     fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_embedding_delta",
-        f"{fp}_e{_ESTREAM_EPOCHS}",
-    )
+    return state_path("stream_embedding_delta", f"{fp}_e{_ESTREAM_EPOCHS}")
 
 
 @query("stream_embedding_delta", family="dedup", oracle=_einc_oracle())
@@ -3679,8 +3642,6 @@ def _ivf_member_gen_index(
     global _MEMBER_GEN_BUILDS
     import os
 
-    from .layout import _atomic_dir_write
-
     path = _member_gen_path(sf_dir, gen)
     if not os.path.isdir(path):
         if gen >= 2:
@@ -3697,7 +3658,7 @@ def _ivf_member_gen_index(
                 dedup_embedding_index_append(spark, sf_dir)
         holdings = spark.read.parquet(serving_path).select("vec_id", "vec")
         rows = _ivf_assign(holdings, cents_bc).select("vec_id", "vec", "cell")
-        _atomic_dir_write(lambda p: rows.write.parquet(p), path)
+        publish(lambda p: rows.write.parquet(p), path)
         _MEMBER_GEN_BUILDS += 1
     return spark.read.parquet(path)
 

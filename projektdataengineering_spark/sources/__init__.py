@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..state import publish
+
 # The reference-domain weather schema: all columns arrive as strings from
 # CSV (header only, no inference — weather_task.py:59), then a cast layer
 # types 5 of them (weather_task.py:61-67). We keep decimal for money-like
@@ -278,38 +280,29 @@ def ensure_bucketed(
       clobbering a shared path another session may be mid-read on
       (round-8 ADVICE: tableExists() alone is session-local and lied
       about the files).
-    * Otherwise → write to a process-unique temp dir, then atomically
-      ``os.rename`` into ``path``. If a concurrent session won the
-      rename race, discard our temp and register over the winner's
-      files (same content by construction — callers put a
+    * Otherwise → install the bucketed files at ``path`` with
+      :func:`~projektdataengineering_spark.state.publish` and register
+      over them. If a concurrent session won the install, its files
+      are kept (same content by construction — callers put a
       source_fingerprint in ``path``/``name``, so a path can only ever
       hold one logical content version; stale fingerprints just leave
       orphaned dirs behind, which is safe garbage, never wrong reuse).
     """
     import os
-    import shutil
     import uuid
 
     if spark.catalog.tableExists(name) and os.path.isdir(path):
         return
-    if not os.path.isdir(path):
-        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+
+    def write(stage: str) -> None:
         tmp_name = f"{name}_tmp_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").option("path", tmp).bucketBy(
+        df.write.mode("overwrite").option("path", stage).bucketBy(
             n_buckets, *bucket_cols
         ).format("parquet").saveAsTable(tmp_name)
         # external table: DROP unregisters without touching the files
         spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            # "lost the race" is only true if a winner's directory is
-            # actually there; a permissions/path failure must surface
-            # HERE, not as an obscure read error off the registered
-            # table later
-            if not os.path.isdir(path):
-                raise
+
+    publish(write, path)
     cols_ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     )

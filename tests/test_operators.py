@@ -1674,16 +1674,12 @@ def test_pq_recall_and_codebook_persistence(spark, sf_dir):
     n = e.count()
     # force one training
     from projektdataengineering_spark.sources import source_fingerprint
+    from projektdataengineering_spark.state import state_path
 
     fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     tag = f"{fp}_pq_m{S._PQ_M}_k{S._PQ_K}_i{S._PQ_ITERS}"
     S._PQ_BOOK_CACHE.pop(tag, None)
-    path = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(S.__file__)))
-        ),
-        ".scratch", "ivf", f"pqbooks_{tag}.npy",
-    )
+    path = state_path("ivf", f"pqbooks_{tag}.npy")
     if os.path.exists(path):
         os.unlink(path)
     runs0 = S._PQ_TRAIN_RUNS
@@ -2287,21 +2283,21 @@ def test_ivfpq_index_append_codes_and_replay(spark, sf_dir):
 
 
 def test_atomic_installers_concurrent_writer_race(spark, sf_dir, tmp_path):
-    """Two writers racing the staged-write installers leave EXACTLY one
-    valid generation and both readers agree (r14 verdict task #6 — the
-    one multi-writer discipline the executed-layout family hadn't
-    pinned). Directory installer (_atomic_dir_write): the loser's
-    os.rename onto the winner's directory fails, its staging is
-    cleaned, the winner's content survives byte-identical. File
-    installer (the .npy centroid/codebook recipe): both writers are
-    bit-identical by trainer determinism, so either rename order leaves
-    one valid loadable artifact — losing the race just means loading
-    the winner's file."""
+    """Two writers racing state.publish leave EXACTLY one valid
+    generation and both readers agree (r14 verdict task #6 — the one
+    multi-writer discipline the executed-layout family hadn't pinned).
+    Directory: the loser's os.rename onto the winner's directory
+    fails, its staging is cleaned, the winner's content survives
+    byte-identical. File (the .npy centroid/codebook installer): both
+    writers are bit-identical by trainer determinism, so the loser's
+    rename atomically replaces the winner's file with the same bytes
+    and leaves one valid loadable artifact."""
     import os
 
     import numpy as np
 
-    from projektdataengineering_spark.queries.layout import _atomic_dir_write
+    from projektdataengineering_spark.queries.similarity import _npy_writer
+    from projektdataengineering_spark.state import publish
 
     final = str(tmp_path / "idx")
 
@@ -2316,28 +2312,29 @@ def test_atomic_installers_concurrent_writer_race(spark, sf_dir, tmp_path):
         writer("A")(p)
         # B completes its ENTIRE install while A sits between staging
         # and rename — the worst-case interleaving
-        _atomic_dir_write(writer("B"), final)
+        publish(writer("B"), final)
 
-    _atomic_dir_write(racing_writer, final)  # A stages, B wins, A loses
+    publish(racing_writer, final)  # A stages, B wins, A loses
     assert sorted(os.listdir(tmp_path)) == ["idx"], "loser staging must be GCed"
     with open(os.path.join(final, "part-0.txt")) as fh:
         assert fh.read() == "B", "winner's generation must survive intact"
     # idempotent re-install over an existing generation: untouched
-    _atomic_dir_write(writer("C"), final)
+    publish(writer("C"), final)
     with open(os.path.join(final, "part-0.txt")) as fh:
         assert fh.read() == "B"
 
-    # .npy file installer: stage both, rename in either order — content
-    # is bit-identical by determinism, so last-rename-wins is benign
+    # .npy file: writer 2 stages while writer 1 installs, then renames
+    # over writer 1's file — same bytes by determinism
     arr = np.arange(8, dtype=np.float64)
     path = str(tmp_path / "cents.npy")
-    t1, t2 = f"{path}.1.tmp.npy", f"{path}.2.tmp.npy"
-    np.save(t1, arr)
-    np.save(t2, arr)
-    os.rename(t1, path)      # writer 1 wins
-    os.rename(t2, path)      # writer 2 'loses': atomic replace, same bytes
+
+    def racing_npy(p):
+        _npy_writer(arr)(p)
+        publish(_npy_writer(arr), path)
+
+    publish(racing_npy, path)
     np.testing.assert_array_equal(np.load(path), arr)
-    assert not os.path.exists(t1) and not os.path.exists(t2)
+    assert sorted(os.listdir(tmp_path)) == ["cents.npy", "idx"]
 
 
 def test_ivfpq_sqrtk_regime_recall_floor(spark, sf_dir, emb_matrix):
@@ -2829,6 +2826,7 @@ def test_index_vacuum_removes_exactly_orphans(spark, sf_dir):
 
     from projektdataengineering_spark.queries import maintenance as M
     from projektdataengineering_spark.queries import similarity as S
+    from projektdataengineering_spark.state import stage_path
 
     audit1 = sorted(
         map(tuple, M.pipeline_index_vacuum(spark, sf_dir).collect())
@@ -2841,13 +2839,13 @@ def test_index_vacuum_removes_exactly_orphans(spark, sf_dir):
 
     # plant three orphan shapes in the embedding line (a stale-geometry
     # v2 from a retune, a crashed staged write of v1 in
-    # _atomic_dir_write's real `{path}.tmp.<pid>.<hex>` shape, and a
+    # state.publish's real staging shape, and a
     # crashed CUTOVER stage of a retrain generation) + one DECOY
     # sibling line and one COMPLETED retrain generation (both live
     # configurations that must survive)
     stale_geom = f"{v1}_v2-e99-o123-a0.5"
-    crashed_tmp = f"{v1}.tmp.777.deadbeef"
-    gen_tmp = f"{v1}_g1-e99-o123-a0.5.tmp.777.deadbeef"
+    crashed_tmp = stage_path(v1, 777, "deadbeef")
+    gen_tmp = stage_path(f"{v1}_g1-e99-o123-a0.5", 777, "deadbeef")
     gen_live = f"{v1}_g7-e99-o123-a0.5"
     decoy = os.path.join(os.path.dirname(v1), "cells_decoytag_k16")
     for p in (stale_geom, crashed_tmp, gen_tmp, gen_live, decoy):
@@ -2885,6 +2883,7 @@ def test_commit_generation_cutover_expires_superseded(spark, sf_dir):
 
     from projektdataengineering_spark.queries import maintenance as M
     from projektdataengineering_spark.queries import similarity as S
+    from projektdataengineering_spark.state import stage_path
 
     # materialize the gen-0 lines so the parents exist
     S.sim_ivfpq_index_append(spark, sf_dir)
@@ -2905,7 +2904,7 @@ def test_commit_generation_cutover_expires_superseded(spark, sf_dir):
         "pq_g2": S._ivfpq_code_index_path(sf_dir, gen=2),
         "em_g1": S._member_gen_path(sf_dir, 1),
         "em_g2": S._member_gen_path(sf_dir, 2),
-        "pq_g1_tmp": f"{S._ivfpq_code_index_path(sf_dir, gen=1)}.tmp.777.feedface",
+        "pq_g1_tmp": stage_path(S._ivfpq_code_index_path(sf_dir, gen=1), 777, "feedface"),
         "decoy": os.path.join(os.path.dirname(pq_v1), "codes_decoytag_g1-e9-o9-a9"),
     }
     cents_g1 = f"{cents_stem}{S._gen_tag(1)}.npy"

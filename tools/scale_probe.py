@@ -234,6 +234,7 @@ def main() -> int:
     from projektdataengineering_spark.operators.skew import salted_join
     from projektdataengineering_spark.queries import load_registry
     from projektdataengineering_spark.session import get_spark
+    from projektdataengineering_spark.state import state_path
 
     spark = get_spark(app_name="pde-scale-probe")
     registry = load_registry()
@@ -276,10 +277,7 @@ def main() -> int:
     # 1b. Heavy families one decade further: sf0.1 → sf1 (synthesized by
     # tools/gen_sf1.py; only documents/embeddings/events are ×10)
     # ------------------------------------------------------------------
-    sf1_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scratch", "sf1",
-    )
+    sf1_dir = state_path("sf1")
     if os.path.isdir(sf1_dir):
         out += [
             "## 1b. Heavy families, one decade further (sf0.1 → sf1)\n",
